@@ -126,8 +126,8 @@ def compose_wave(pending: DataFrame, host_policy: DataFrame,
     ``budget × n_partitions`` rows. Output is unchanged: every row in the
     global first-``budget`` by (priority, seq) has local rank ≤ global rank
     ≤ budget in its own partition, so local pruning is prefix-stable. The
-    subsequent fetch stage re-spreads rows via frontier.salt_partitions, so
-    no task inherits a whole host.
+    crawl loop's fetch hops that follow are broadcast semi-joins streaming
+    ``pages`` in its own partitioning, so no task inherits a whole host.
     """
     pol = (host_policy if robots_col is None
            else host_policy.select("host", "crawl_delay_ms"))

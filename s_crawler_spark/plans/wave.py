@@ -26,13 +26,15 @@ Plan shape / scale notes (verified via .explain — see BENCH notes):
 
 from __future__ import annotations
 
-import os
 import time
 from concurrent.futures import ThreadPoolExecutor
+from dataclasses import dataclass, field, replace
 from datetime import datetime, timedelta
+from types import SimpleNamespace
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from ..functions import scalars
 from ..operators import dedup as dd
@@ -264,6 +266,91 @@ def run_wave(pages: DataFrame, seed_url: str,
 # Resumable multi-wave loop (reference §3.2 enqueue + §3.3 drain, decoupled)
 # --------------------------------------------------------------------------
 
+# width of the thread pool a wave's independent per-table commits fan out
+# over. An interleaved sweep (BENCH.md, tools/bench_wave_phases.py) found
+# widths 4 and 8 tied and serial commits 1.18x slower.
+COMMIT_POOL = 8
+
+META_COLS = ["url", "title", "doi", "journal", "publication_date", "authors"]
+
+# the WaveState views of the four tables every resumed crawl reads
+VIEWS = (("frontier_df", "frontier"), ("catalog", "articles"),
+         ("seen_df", "seen"), ("cand_store", "candidates"))
+
+
+@dataclass
+class WaveState:
+    """What one wave hands to the next: the composed views of the committed
+    tables, plus the in-process counters that stand in for per-wave scans."""
+    frontier_df: DataFrame | None = None
+    catalog: DataFrame | None = None
+    seen_df: DataFrame | None = None
+    cand_store: DataFrame | None = None
+    policy_df: DataFrame | None = None      # adapted delays (adaptive_delay)
+    trap_state_df: DataFrame | None = None  # per-host trap counts (trap_guard)
+    # False until the STORED trap_state table matches trap_state_df (fresh
+    # table, or a re-seed recomputed the counts in memory): the next commit
+    # must then be a full snapshot — a keyed delta would compose over a
+    # stale/absent base. True after every commit and on an in-sync resume.
+    trap_base_ok: bool = False
+    # per-status frontier row counts, maintained incrementally (O(wave)
+    # arithmetic per wave, seeded by ONE scan when a store is resumed)
+    status_counts: dict[str, int] = field(default_factory=dict)
+    # the frontier delta chain since its last full snapshot: length and
+    # accumulated rows (the compact_every="auto" trigger's inputs)
+    chain_len: int = 0
+    delta_since_full: int = 0
+    # discovery fingerprint of this process' last full scan, and the
+    # discovery output schema (resolved the first time a wave skips)
+    last_disc_fp: tuple | None = None
+    cand_schema: StructType | None = None
+    # the robots rules changed since the stored bits were computed: the
+    # next frontier commit must be full
+    frontier_needs_full: bool = False
+
+
+@dataclass(frozen=True)
+class CrawlConfig:
+    """One crawl() call's fixed inputs: its knobs (documented on crawl())
+    in signature order, then what _setup_rules derives from them once."""
+    spark: SparkSession
+    pages: DataFrame
+    seed_url: str
+    store: SnapshotStore
+    max_count: int | None
+    wave_seconds: int
+    host_policy: DataFrame | None
+    n_shards: int | str
+    shard_target_items: int
+    filter_kind: str
+    adaptive_delay: bool
+    expire_keep: int | None
+    trap_guard: bool
+    compact_every: int | str
+    compact_frac_bp: int
+    compact_chain_cap: int
+    priority_df: DataFrame | None
+    robots_policy: DataFrame | None = None
+    rules_fp: str | None = None
+    rules_collapsed: DataFrame | None = None
+
+
+# One wave's intermediate frames and counts ride on a per-wave namespace
+# ``w``: crawl() creates it with ``wave`` and ``now`` (the wave's logical
+# clock), and the phases fill in the rest in this order:
+#   _discover_and_enqueue  new_rows (this wave's new frontier rows),
+#                          new_meta (their card metadata), frontier_all,
+#                          cand_all (table ∪ new rows), shards_df and
+#                          stored_ns (the stored filter shards and their
+#                          modulus; None when not probe-able)
+#   _admit                 batch, policy, add_counts (trap_guard partials)
+#   _fetch_parse_dedup     fetched, lineage, new_articles
+#   _account               results, frontier_delta, seen_delta, metrics,
+#                          n_delta, n_enq, n_term, n_done, n_outcomes,
+#                          ns_commit (shard modulus to commit), is_full
+#   _commit                committed (the tables this wave committed)
+
+
 def crawl(spark: SparkSession, pages: DataFrame, seed_url: str,
           store: SnapshotStore,
           max_count: int | None = None,
@@ -273,7 +360,6 @@ def crawl(spark: SparkSession, pages: DataFrame, seed_url: str,
           max_waves: int = 50,
           shard_target_items: int = sn.SHARD_TARGET_ITEMS,
           filter_kind: str = "bloom",
-          salt_buckets: int | None = None,
           resume: bool = True,
           adaptive_delay: bool = False,
           expire_keep: int | None = None,
@@ -288,6 +374,20 @@ def crawl(spark: SparkSession, pages: DataFrame, seed_url: str,
     last committed wave (pytest:
     tests/test_wave_parity.py::test_resume_from_checkpoint).
 
+    Each wave runs as phases over one ``WaveState``: discover and enqueue,
+    admit, fetch-parse and insert dedup, account, commit, advance (the
+    ``_``-prefixed functions below, in that order).
+
+    The store has ONE format — the one this loop writes, stamped into its
+    wave pointer (sources/store.FORMAT_VERSION). ``resume=True`` rolls the
+    store back to its pointer and refuses a store with tables but no
+    pointer of this format; nothing is upgraded or inferred. An external
+    seeder (e.g. a hand-built frontier) commits its tables and then calls
+    ``store.mark_wave_committed(w)`` itself; the crawl resumes at w + 1
+    and decorates a seeded frontier's robots bits (its snapshot carries
+    no rules fingerprint). ``resume=False`` refuses a store that already
+    has a frontier.
+
     State commits are O(wave), not O(total): each wave writes only its
     *change set* — status transitions + new enqueues for ``frontier``
     (keyed delta on url_hash, the Iceberg MERGE shape and the reference's
@@ -299,9 +399,9 @@ def crawl(spark: SparkSession, pages: DataFrame, seed_url: str,
     trap hosts ride along as tombstone rows, store delete_where). Reads
     compose base ⊕ deltas merge-on-read (sources/store.py). Every
     ``compact_every``-th wave commits full snapshots instead (compaction —
-    bounds the delta chain read cost); ``compact_every=1`` forces the
-    all-full legacy behavior. At a 10^10-row frontier with 10^6-row waves
-    this removes ~10,000× per-wave write amplification.
+    bounds the delta chain read cost); ``compact_every=1`` commits every
+    wave full. At a 10^10-row frontier with 10^6-row waves this removes
+    ~10,000× per-wave write amplification.
 
     The per-wave *reads* are O(wave)-shaped too: candidate re-hydration
     prunes the O(total) candidates table with a broadcast semi-join on the
@@ -337,9 +437,10 @@ def crawl(spark: SparkSession, pages: DataFrame, seed_url: str,
     per-host rollup is committed wave state (``trap_state``), maintained
     incrementally from the wave's enqueues/departures (O(wave) feature
     extraction, touched-host fold and commit — never a pending-sized scan
-    or an all-hosts rewrite); a resume from a store without the table
-    re-seeds it with one scan (and the next commit is full, re-anchoring
-    the delta chain).
+    or an all-hosts rewrite); a resume that turns the guard on for the
+    first time, or back on after waves without it, re-seeds the rollup
+    with one scan (and the next commit is full, re-anchoring the delta
+    chain).
 
     ``n_shards="auto"`` sizes the seen-filter shard layout from the live
     seen-set size instead of a fixed modulus: each wave targets
@@ -369,8 +470,7 @@ def crawl(spark: SparkSession, pages: DataFrame, seed_url: str,
     maintained counters plus per-delta row counts recorded in the snapshot
     manifest (``meta.n_delta``) — no extra scans — and a resumed crawl
     re-seeds the chain statistics from the manifest, so the schedule is a
-    pure function of committed state (legacy delta snapshots without the
-    meta count as 0 rows; the chain cap still bounds them).
+    pure function of committed state.
 
     ``filter_kind`` selects the seen-filter kernel for NEW shard builds:
     ``"bloom"`` (default — densest at pure-membership workloads) or
@@ -384,44 +484,45 @@ def crawl(spark: SparkSession, pages: DataFrame, seed_url: str,
 
     Returns the final articles catalog in crawl order.
     """
-    auto_shards = isinstance(n_shards, str)
-    if auto_shards and n_shards != "auto":
-        raise ValueError(f"n_shards must be an int or 'auto', got {n_shards!r}")
+    for name, value in (("n_shards", n_shards),
+                        ("compact_every", compact_every)):
+        if isinstance(value, str) and value != "auto":
+            raise ValueError(f"{name} must be an int or 'auto', got {value!r}")
     if filter_kind not in ("bloom", "cuckoo"):
         raise ValueError(
             f"filter_kind must be 'bloom' or 'cuckoo', got {filter_kind!r}")
-    compact_auto = isinstance(compact_every, str)
-    if compact_auto and compact_every != "auto":
-        raise ValueError(
-            f"compact_every must be an int or 'auto', got {compact_every!r}")
-    start_wave = 0
-    frontier_df = catalog = seen_df = cand_store = policy_df = None
-    trap_state_df = None  # per-host pending-backlog trap counts (trap_guard)
-    # False until the STORED trap_state table matches trap_state_df (fresh
-    # table, or a re-seed recomputed the counts in memory): the next commit
-    # must then be a full snapshot — a keyed delta would compose over a
-    # stale/absent base. True after every commit and on an in-sync resume.
-    trap_base_ok = False
-    # per-status frontier row counts, maintained incrementally (O(wave)
-    # arithmetic per wave, seeded by ONE scan on the first wave of this
-    # process — see the fetch_log commit below). Keyed by status string.
-    status_counts: dict[str, int] | None = None
-    if resume:
-        # a wave's ~10 per-table commits are individually atomic but not
-        # jointly: a crash between two of them leaves a TORN wave (e.g.
-        # frontier rows marked done whose articles snapshot never landed —
-        # rows a latest_wave+1 resume would silently lose). The store's
-        # durable wave pointer is flipped only after a wave's LAST commit;
-        # roll back any unacknowledged snapshots and re-run the torn wave
-        # from the committed boundary (commits are wave-keyed idempotent
-        # overwrites, built for exactly this re-run).
-        boundary = store.rollback_to_committed()
-        if store.committed_wave() is None:
-            # first pointer-era crawl over this store: stamp the inferred
-            # boundary (legacy store / external frontier seed), or arm the
-            # pointer at −1 on an empty store so even a crash inside wave 0
-            # rolls back cleanly instead of leaving a torn first wave
-            store.mark_wave_committed(boundary if boundary is not None else -1)
+    st, start_wave = _open(spark, store, resume, adaptive_delay, trap_guard)
+    cfg = _setup_rules(CrawlConfig(
+        spark, pages, seed_url, store, max_count, wave_seconds, host_policy,
+        n_shards, shard_target_items, filter_kind, adaptive_delay,
+        expire_keep, trap_guard, compact_every, compact_frac_bp,
+        compact_chain_cap, priority_df), st)
+    for wave in range(start_wave, max_waves):
+        w = SimpleNamespace(
+            wave=wave, now=LOGICAL_T0 + timedelta(seconds=wave * wave_seconds))
+        _discover_and_enqueue(cfg, st, w)
+        _admit(cfg, st, w)
+        _fetch_parse_dedup(cfg, st, w)
+        _account(cfg, st, w)
+        _commit(cfg, st, w)
+        if _advance(cfg, st, w):
+            break
+    return st.catalog.orderBy("seq") if st.catalog is not None else None
+
+
+def _open(spark: SparkSession, store: SnapshotStore, resume: bool,
+          adaptive_delay: bool, trap_guard: bool) -> tuple[WaveState, int]:
+    """Phase: open the store. Returns the state a resumed crawl continues
+    from (empty for a fresh store) and the first wave to run."""
+    # a wave's ~10 per-table commits are individually atomic but not
+    # jointly: a crash between two of them leaves a TORN wave (e.g.
+    # frontier rows marked done whose articles snapshot never landed —
+    # rows a latest_wave+1 resume would silently lose). The store's
+    # durable wave pointer is flipped only after a wave's LAST commit;
+    # roll back any unacknowledged snapshots and re-run the torn wave
+    # from the committed boundary (commits are wave-keyed idempotent
+    # overwrites, built for exactly this re-run).
+    boundary = store.rollback_to_committed() if resume else None
     if not resume and store.latest_wave("frontier") is not None:
         # starting a FRESH crawl into a used store would re-commit wave 0
         # while the old store's later-wave snapshots stay newest in the
@@ -433,69 +534,73 @@ def crawl(spark: SparkSession, pages: DataFrame, seed_url: str,
             "resume=False on a store with committed waves would interleave "
             "new snapshots under stale ones; use a fresh store root "
             "(or resume=True to continue)")
-    if not resume and store.committed_wave() is None:
-        store.mark_wave_committed(-1)  # arm the pointer before wave 0
-    if resume and store.latest_wave("frontier") is not None:
-        # resume from the COMMITTED pointer, not latest_wave: empty-delta
-        # waves skip their frontier commit, so a table's newest wave can
-        # legitimately lag the last completed wave
-        start_wave = (boundary if boundary is not None
-                      else store.latest_wave("frontier")) + 1
-        frontier_df = store.read(spark, "frontier")
-        catalog = store.read(spark, "articles")
-        seen_df = store.read(spark, "seen")
-        cand_store = store.read(spark, "candidates")
-        if adaptive_delay and store.latest_wave("host_policy") is not None:
-            policy_df = store.read(spark, "host_policy") \
+    if store.committed_wave() is None:
+        # arm the pointer at −1 before the first commit, so even a crash
+        # inside wave 0 rolls back cleanly instead of tearing the store
+        store.mark_wave_committed(-1)
+    st = WaveState()
+    if store.latest_wave("frontier") is None:
+        return st, 0
+    for attr, table in VIEWS:
+        setattr(st, attr, store.read(spark, table))
+    # the status counters' seed: ONE scan per process, from the committed
+    # state, so a crash between the frontier and fetch_log commits can
+    # never leave drift
+    st.status_counts = {r["status"]: r["count"] for r in
+                        st.frontier_df.groupBy("status").count().collect()}
+    if adaptive_delay and store.latest_wave("host_policy") is not None:
+        st.policy_df = store.read(spark, "host_policy") \
+            .localCheckpoint(eager=False)
+    if trap_guard:
+        ts_wave = store.latest_wave("trap_state")
+        # per-table wave numbering is SPARSE (unchanged tables skip
+        # their commit), so trap_state legitimately lags the frontier
+        # after retry-only waves (n_delta > 0 but no enqueues and no
+        # departures — counts unmoved, commit skipped). The counts
+        # have actually drifted only if some later wave DID move them
+        # without folding (guard toggled off): enqueues commit
+        # `candidates` and departures commit `seen`, so those tables'
+        # latest waves bound the last count movement. Torn waves are
+        # already rolled back above, so no crash window reaches here.
+        moved = max((w for w in (store.latest_wave("candidates"),
+                                 store.latest_wave("seen"))
+                     if w is not None), default=None)
+        if ts_wave is not None and (moved is None or ts_wave >= moved):
+            st.trap_state_df = store.read(spark, "trap_state") \
                 .localCheckpoint(eager=False)
-        if trap_guard:
-            ts_wave = store.latest_wave("trap_state")
-            # per-table wave numbering is SPARSE (unchanged tables skip
-            # their commit), so trap_state legitimately lags the frontier
-            # after retry-only waves (n_delta > 0 but no enqueues and no
-            # departures — counts unmoved, commit skipped). The counts
-            # have actually drifted only if some later wave DID move them
-            # without folding (guard toggled off): enqueues commit
-            # `candidates` and departures commit `seen`, so those tables'
-            # latest waves bound the last count movement. Torn waves are
-            # already rolled back above, so no crash window reaches here.
-            moved = max((w for w in (store.latest_wave("candidates"),
-                                     store.latest_wave("seen"))
-                         if w is not None), default=None)
-            if ts_wave is not None and (moved is None or ts_wave >= moved):
-                trap_state_df = store.read(spark, "trap_state") \
-                    .localCheckpoint(eager=False)
-                trap_base_ok = True
-            else:
-                # table absent (store predates incremental trap state) or
-                # lagging a wave that moved the counts (guard toggled off
-                # for waves whose enqueues/departures were never folded):
-                # the stored counts have drifted from the actual backlog,
-                # so re-seed from the frontier with ONE O(pending) scan
-                # this process — the same recovery rule as status_counts
-                # below. Incremental thereafter.
-                trap_state_df = tp.update_trap_state(
-                    None, added=frontier_df.filter(
-                        F.col("status") == fr.STATUS_PENDING)) \
-                    .localCheckpoint(eager=False)  # 3 first-wave consumers
+            st.trap_base_ok = True
+        else:
+            # table absent (the guard is on for the first time) or
+            # lagging a wave that moved the counts (guard toggled off
+            # for waves whose enqueues/departures were never folded):
+            # the stored counts have drifted from the actual backlog,
+            # so re-seed from the frontier with ONE O(pending) scan
+            # this process — the same recovery rule as status_counts
+            # above. Incremental thereafter.
+            st.trap_state_df = tp.update_trap_state(
+                None, added=st.frontier_df.filter(
+                    F.col("status") == fr.STATUS_PENDING)) \
+                .localCheckpoint(eager=False)  # 3 first-wave consumers
+    # auto-compaction chain statistics, seeded from the committed manifest
+    # (each frontier delta records its row count in meta.n_delta), so a
+    # resumed crawl compacts exactly where the uninterrupted one would
+    for s in reversed(store.snapshots("frontier")):
+        if s["mode"] != "delta":
+            break
+        st.chain_len += 1
+        st.delta_since_full += s["meta"]["n_delta"]
+    # resume from the COMMITTED pointer, not latest_wave: empty-delta
+    # waves skip their frontier commit, so a table's newest wave can
+    # legitimately lag the last completed wave
+    return st, boundary + 1
 
-    # auto-compaction chain statistics: length and accumulated row count of
-    # the frontier delta chain since the last full snapshot. Seeded from the
-    # committed manifest (per-delta row counts ride in meta.n_delta), then
-    # maintained in-process — the schedule is a pure function of committed
-    # state, so a resumed crawl compacts exactly where the uninterrupted
-    # one would. Legacy deltas without the meta count as 0 rows; the chain
-    # cap still bounds them.
-    chain_len = delta_since_full = 0
-    if compact_auto:
-        for s in reversed(store.snapshots("frontier")):
-            if s.get("mode", "full") != "delta":
-                break
-            chain_len += 1
-            delta_since_full += int(s.get("meta", {}).get("n_delta") or 0)
 
-    meta_cols = ["url", "title", "doi", "journal", "publication_date", "authors"]
-
+def _setup_rules(cfg: CrawlConfig, st: WaveState) -> CrawlConfig:
+    """Phase: the crawl's static dimensions and robots rules, derived once
+    per call; re-decorates a resumed frontier whose stored robots bits
+    were computed under other rules."""
+    host_policy, priority_df, robots_policy = (cfg.host_policy,
+                                               cfg.priority_df, None)
     if host_policy is not None:
         # ONE row per host before anything consumes the dimension:
         # duplicate host rows in a caller-supplied policy would fan out
@@ -517,13 +622,11 @@ def crawl(spark: SparkSession, pages: DataFrame, seed_url: str,
         # host-policy table — parse each host's /robots.txt page from the
         # corpus (group-aware, CRLF-safe; operators/politeness.py). Parsed
         # once per crawl, not per wave: one pages scan, checkpointed.
-        robots = pages.filter(F.col("url").endswith("/robots.txt")) \
+        robots = cfg.pages.filter(F.col("url").endswith("/robots.txt")) \
             .select(F.parse_url(F.col("url"), F.lit("HOST")).alias("host"),
                     F.col("html").cast("string").alias("robots_txt"))
         robots_policy = po.parse_robots_policy(robots, default_delay_ms=1000) \
             .localCheckpoint(eager=False)
-    else:
-        robots_policy = None
 
     # robots rules are STATIC within one crawl (parsed once above, or the
     # caller's host_policy dimension — adaptation changes only delays), so
@@ -547,39 +650,30 @@ def crawl(spark: SparkSession, pages: DataFrame, seed_url: str,
     # dimension (a host-dimensioned aggregate + exchange) is paid once
     # here, not inside every per-wave decorate_robots_ok call
     rules_collapsed = po.collapse_rules(rules_src).localCheckpoint(eager=False)
-    frontier_needs_full = False
-    if frontier_df is not None:
-        stored_fp = next(
-            (s["meta"].get("rules_fp")
-             for s in reversed(store.snapshots("frontier"))
-             if s.get("meta", {}).get("rules_fp") is not None), None)
-        needs_robots = ("robots_ok" not in frontier_df.columns
-                        or stored_fp != rules_fp)
-        needs_bucket = "next_eligible_bucket" not in frontier_df.columns
-        if needs_robots:
-            # legacy store (frontier predates the stored robots bit) or the
-            # rules CHANGED since the bits were stored: re-decorate with
-            # the current rules — one O(total) pass per upgrade/change —
-            # and force the next frontier commit FULL so the re-decorated
-            # values persist and a delta chain never mixes schemas
-            # (compose unions snapshots by name)
-            frontier_df = po.decorate_robots_ok(
-                frontier_df.drop("robots_ok"), rules_collapsed,
-                pre_collapsed=True)
-        if needs_bucket:
-            # legacy store predating the coarse admission-scan partition
-            # column: derive it once (cheap flooring; same forced-full rule)
-            frontier_df = frontier_df.withColumn(
-                "next_eligible_bucket",
-                fr.eligible_bucket(F.col("next_eligible")))
-        if needs_robots or needs_bucket:
-            # the migrated frame feeds several consumers this wave
-            # (eligible_pending scan, the `changed` semi-join, the full
-            # record_results commit, the n_future check): checkpoint so the
-            # interpreted O(total) robots fold runs once, not per consumer
-            frontier_df = frontier_df.localCheckpoint(eager=False)
-            frontier_needs_full = True
+    if (st.frontier_df is not None and rules_fp != cfg.store.snapshots(
+            "frontier")[-1]["meta"].get("rules_fp")):
+        # the rules CHANGED since the bits were stored (or the frontier
+        # was seeded externally and has none): re-decorate with the
+        # current rules — one O(total) pass — and force the next frontier
+        # commit FULL so the re-decorated values persist. The frame feeds
+        # several consumers this wave (eligible_pending scan, the
+        # `changed` semi-join, the full record_results commit, the
+        # n_future check): checkpoint so the interpreted O(total) robots
+        # fold runs once, not per consumer
+        st.frontier_df = po.decorate_robots_ok(
+            st.frontier_df.drop("robots_ok"), rules_collapsed,
+            pre_collapsed=True).localCheckpoint(eager=False)
+        st.frontier_needs_full = True
+    return replace(cfg, host_policy=host_policy, priority_df=priority_df,
+                   robots_policy=robots_policy, rules_fp=rules_fp,
+                   rules_collapsed=rules_collapsed)
 
+
+def _discover_and_enqueue(cfg: CrawlConfig, st: WaveState,
+                          w: SimpleNamespace) -> None:
+    """Phase: discovery, the seen-filter probe and the enqueue (idempotent:
+    the seen set dedups re-discovery)."""
+    spark, pages, seed_url = cfg.spark, cfg.pages, cfg.seed_url
     # discovery fingerprint (per process): a cheap url-COLUMN aggregate over
     # the seed's search-page family. When it is unchanged since this
     # process' last full discovery scan AND max_count is None, re-running
@@ -595,515 +689,479 @@ def crawl(spark: SparkSession, pages: DataFrame, seed_url: str,
     # re-discoveries; pytest pins the grown-corpus resume). With max_count
     # set the full re-scan is kept: truncation picks the top-k of the
     # CURRENT candidate set, which changes as the catalog grows.
-    last_disc_fp = None
-    cand_schema = None  # discovery output schema — wave-invariant,
-    # resolved once (analysis only) the first time a wave skips
+    disc_fp = (_content_fp(search_pages(pages, seed_url), F.col("url"))
+               if cfg.max_count is None else None)
+    if disc_fp is not None and disc_fp == st.last_disc_fp:
+        # page set unchanged since this process' last scan: discovery
+        # is a no-op by construction — schema-only empty stand-in
+        # (catalog=None path: analysis only, nothing executes)
+        if st.cand_schema is None:
+            st.cand_schema = collect_candidates(pages, seed_url, wave=w.wave,
+                                                catalog=None).schema
+        cand = spark.createDataFrame([], st.cand_schema)
+    else:
+        cand = collect_candidates(pages, seed_url, wave=w.wave,
+                                  max_count=cfg.max_count, catalog=st.catalog)
+        st.last_disc_fp = disc_fp
+    cand = cand.withColumn("url_hash", scalars.canonical_url_hash(F.col("url")))
+    w.shards_df = cfg.store.read(spark, "seen_shards")
+    # the committed shard layout (modulus + kernel revision) rides in the
+    # newest seen_shards snapshot's metadata. The probe MUST use the
+    # layout the blobs were built under — on a resume with a different
+    # n_shards the stored blobs are still exact under their own modulus,
+    # and the commit phase rebuilds them once under the new one
+    stored = (cfg.store.snapshots("seen_shards")[-1]["meta"]
+              if w.shards_df is not None else {})
+    w.stored_ns = stored.get("n_shards")
+    if w.shards_df is not None and stored.get("filter_rev") != sn.FILTER_REV:
+        # blobs built by a DIFFERENT kernel revision: probing them
+        # with the current kernels would yield false negatives that
+        # bypass the exact backstop (duplicate crawls). Fall back to
+        # the exact-only probe this wave; the commit phase sees
+        # shards_df None and full-rebuilds under the current revision.
+        w.shards_df, w.stored_ns = None, None
+    fresh = cand if st.seen_df is None else sn.dedup_against_seen(
+        cand, st.seen_df, w.shards_df, key_col="url_hash",
+        n_shards=w.stored_ns)
+    # already-enqueued (still pending) URLs must not re-enqueue either.
+    # cand_store is O(total): broadcast semi-prune (scan, no shuffle);
+    # fresh is checkpointed first — inside pruned_anti_join it feeds
+    # BOTH the prune key set and the join's left side
+    fresh = fresh.localCheckpoint(eager=False)
+    if st.cand_store is not None:
+        fresh = dd.pruned_anti_join(fresh, st.cand_store, "url")
+    # within-run duplicate cards enqueue once per URL (the frontier is
+    # URL-keyed; the *insert-time* tiered dedup is doi/md5/title-keyed)
+    fresh = dd.first_occurrence(fresh, "url_hash", "seq")
+    # checkpointed AGAIN above the anti-join + window: fresh now feeds
+    # the enqueue chain AND the metadata projection (new_meta →
+    # hydration + candidates commit) — without this, each consumer
+    # re-executes the O(total) candidates semi-prune scan and the
+    # first-occurrence shuffle per wave
+    fresh = fresh.localCheckpoint(eager=False)
+    new_rows = po.decorate_robots_ok(
+        fr.enqueue(fresh.drop("url_hash"), w.wave, w.now),
+        cfg.rules_collapsed, pre_collapsed=True)
+    if cfg.priority_df is not None:
+        # rank-primed admission order: authority priorities decorate the
+        # new rows via a broadcast dimension join (J4 shape) — never a
+        # frontier-sized shuffle (collapsed to one row per url at setup)
+        pr = F.broadcast(cfg.priority_df.select(
+            "url", F.col("priority").alias("__prio")))
+        new_rows = (new_rows.join(pr, on="url", how="left")
+                    .withColumn("priority",
+                                F.coalesce(F.col("__prio"), F.col("priority")))
+                    .drop("__prio"))
+    # many consumers (pending scan, trap partials, frontier delta,
+    # commits): the checkpoint stops the enqueue-time robots fold and
+    # discovery plan re-executing per consumer
+    w.new_rows = new_rows.localCheckpoint(eager=False)
+    w.frontier_all = (w.new_rows if st.frontier_df is None
+                      else st.frontier_df.unionByName(w.new_rows))
+    # the candidates table carries card metadata for drain-time
+    # re-hydration — the analogue of the reference re-reading article
+    # rows from the DB before download (pdf_downloader.py:34-46, J2)
+    w.new_meta = fresh.select(*META_COLS)
+    w.cand_all = (w.new_meta if st.cand_store is None
+                  else st.cand_store.unionByName(w.new_meta))
 
-    for wave in range(start_wave, max_waves):
-        logical_now = LOGICAL_T0 + timedelta(seconds=wave * wave_seconds)
-        # wave 0 (or the first commit after an empty store) writes the base;
-        # fixed cadence: every compact_every-th wave compacts the delta
-        # chain into a fresh full snapshot — absolute wave number, so a
-        # resumed crawl compacts on the same schedule it would have
-        # uninterrupted. "auto" leaves the decision provisional here and
-        # finalizes it after this wave's delta is counted (nothing between
-        # this point and the commit section reads is_full).
-        is_full = (frontier_df is None or frontier_needs_full
-                   or (not compact_auto
-                       and (compact_every <= 1
-                            or wave % compact_every == 0)))
 
-        # --- discovery + enqueue (idempotent: seen-set dedups re-discovery) ---
-        disc_fp = None
-        if max_count is None:
-            disc_fp = _content_fp(search_pages(pages, seed_url),
-                                  F.col("url"))
-        if disc_fp is not None and disc_fp == last_disc_fp:
-            # page set unchanged since this process' last scan: discovery
-            # is a no-op by construction — schema-only empty stand-in
-            # (catalog=None path: analysis only, nothing executes)
-            if cand_schema is None:
-                cand_schema = collect_candidates(pages, seed_url, wave=wave,
-                                                 catalog=None).schema
-            cand = spark.createDataFrame([], cand_schema)
-        else:
-            cand = collect_candidates(pages, seed_url, wave=wave,
-                                      max_count=max_count, catalog=catalog)
-            last_disc_fp = disc_fp
-        cand = cand.withColumn("url_hash", scalars.canonical_url_hash(F.col("url")))
-        shards_df = store.read(spark, "seen_shards")
-        # the committed shard layout's modulus (None: no table yet, or a
-        # legacy store without layout metadata). The probe MUST use the
-        # layout the blobs were built under — on a resume with a different
-        # n_shards the stored blobs are still exact under their own
-        # modulus, and the commit below rebuilds them once under the new one
-        stored_meta = next(
-            (s["meta"] for s in reversed(store.snapshots("seen_shards"))
-             if s.get("meta", {}).get("n_shards") is not None), {})
-        stored_ns = stored_meta.get("n_shards")
-        if (shards_df is not None
-                and stored_meta.get("filter_rev", 1) != sn.FILTER_REV):
-            # blobs built by a DIFFERENT kernel revision: probing them
-            # with the current kernels would yield false negatives that
-            # bypass the exact backstop (duplicate crawls). Fall back to
-            # the exact-only probe this wave; the commit below sees
-            # shards_df None and full-rebuilds under the current revision.
-            shards_df, stored_ns = None, None
-        if seen_df is not None:
-            fresh = sn.dedup_against_seen(cand, seen_df, shards_df,
-                                          key_col="url_hash",
-                                          n_shards=stored_ns)
-        else:
-            fresh = cand
-        # already-enqueued (still pending) URLs must not re-enqueue either.
-        # cand_store is O(total): broadcast semi-prune (scan, no shuffle);
-        # fresh is checkpointed first — inside pruned_anti_join it feeds
-        # BOTH the prune key set and the join's left side
-        fresh = fresh.localCheckpoint(eager=False)
-        if cand_store is not None:
-            fresh = dd.pruned_anti_join(fresh, cand_store, "url")
-        # within-run duplicate cards enqueue once per URL (the frontier is
-        # URL-keyed; the *insert-time* tiered dedup below is doi/md5/title-keyed)
-        fresh = dd.first_occurrence(fresh, "url_hash", "seq")
-        # checkpointed AGAIN above the anti-join + window: fresh now feeds
-        # the enqueue chain AND the metadata projection (new_meta →
-        # hydration + candidates commit) — without this, each consumer
-        # re-executes the O(total) candidates semi-prune scan and the
-        # first-occurrence shuffle per wave
-        fresh = fresh.localCheckpoint(eager=False)
-        new_frontier_rows = po.decorate_robots_ok(
-            fr.enqueue(fresh.drop("url_hash"), wave, logical_now),
-            rules_collapsed, pre_collapsed=True)
-        if priority_df is not None:
-            # rank-primed admission order: authority priorities decorate the
-            # new rows via a broadcast dimension join (J4 shape) — never a
-            # frontier-sized shuffle (collapsed to one row per url above)
-            pr = F.broadcast(priority_df.select(
-                "url", F.col("priority").alias("__prio")))
-            new_frontier_rows = (
-                new_frontier_rows.join(pr, on="url", how="left")
-                .withColumn("priority",
-                            F.coalesce(F.col("__prio"), F.col("priority")))
-                .drop("__prio"))
-        # many consumers (pending scan, trap partials, frontier delta,
-        # commits): the checkpoint stops the enqueue-time robots fold and
-        # discovery plan re-executing per consumer
-        new_frontier_rows = new_frontier_rows.localCheckpoint(eager=False)
+def _admit(cfg: CrawlConfig, st: WaveState, w: SimpleNamespace) -> None:
+    """Phase: admission — trap containment, the wave's host policy and the
+    politeness-budgeted wave composition."""
+    pending = fr.eligible_pending(w.frontier_all, w.now)
+    w.add_counts = None
+    if cfg.trap_guard:
+        # spider-trap containment as an admission filter: hosts whose
+        # pending URL shapes trip the trap heuristics stop consuming
+        # budget this wave (operators/traps.py; rows stay pending, so
+        # a host that recovers is re-admitted automatically). The
+        # rollup is maintained INCREMENTALLY and at TOUCHED-HOST scope:
+        # fold this wave's enqueues onto only the hosts they touch
+        # (state pruned by a broadcast semi-join — scanned, never
+        # shuffled), then flag = re-flagged touched hosts ∪ the prior
+        # state's still-untouched flags. Feature extraction touches
+        # only O(wave) rows, the fold only O(touched-host) rows.
+        # the wave's enqueue partials feed BOTH the admission flag fold
+        # here and the commit fold — computed and checkpointed once
+        # (per-URL feature extraction is the expensive part)
+        w.add_counts = tp.host_trap_counts(w.new_rows) \
+            .localCheckpoint(eager=False)
+        # checkpointed: two consumers (flag rows + touched-host key set)
+        pre_touched = tp.update_trap_state(
+            st.trap_state_df, added_counts=w.add_counts, touched_only=True) \
+            .localCheckpoint(eager=False)
+        flagged = pre_touched.filter(F.col("is_trap") == 1).select("host")
+        if st.trap_state_df is not None:
+            flagged = (st.trap_state_df.filter(F.col("is_trap") == 1)
+                       .select("host")
+                       .join(F.broadcast(pre_touched.select("host")),
+                             on="host", how="left_anti")
+                       .unionByName(flagged))
+        # host-dimensioned build side: broadcast so the O(pending) left
+        # never sort-merge-shuffles past the auto-broadcast threshold
+        pending = pending.join(F.broadcast(flagged), on="host",
+                               how="left_anti")
+    # the wave's host policy: the caller's dimension as given, or a base
+    # (adapted delays from previous waves / a resumed snapshot, else the
+    # parsed robots rules) that hosts first seen this wave join at the
+    # default a fresh policy would give them — 1 s for hosts with no
+    # robots.txt — then adapt like the rest
+    w.policy, base = cfg.host_policy, cfg.robots_policy
+    if cfg.adaptive_delay and st.policy_df is not None:
+        base = st.policy_df
+    if base is not None:
+        fill_ms = (1000 if cfg.robots_policy is not None
+                   else po.DEFAULT_CRAWL_DELAY_MS)
+        missing = pending.select("host").distinct() \
+            .join(base.select("host"), on="host", how="left_anti")
+        w.policy = base.unionByName(
+            po.default_host_policy(cfg.spark, missing, crawl_delay_ms=fill_ms))
+    # two consumers (hydration key set + join left side): lazy
+    # checkpoint stops the two-window admission plan re-executing
+    w.batch = po.compose_wave(pending, w.policy, cfg.wave_seconds,
+                              robots_col="robots_ok") \
+        .localCheckpoint(eager=False)
 
-        frontier_all = (new_frontier_rows if frontier_df is None
-                        else frontier_df.unionByName(new_frontier_rows))
-        # the candidates table carries card metadata for drain-time
-        # re-hydration — the analogue of the reference re-reading article
-        # rows from the DB before download (pdf_downloader.py:34-46, J2)
-        new_meta = fresh.select(*meta_cols)
-        cand_all = (new_meta if cand_store is None
-                    else cand_store.unionByName(new_meta))
 
-        # --- politeness-budgeted wave composition + skew salting ---
-        pending = fr.eligible_pending(frontier_all, logical_now)
-        if trap_guard:
-            # spider-trap containment as an admission filter: hosts whose
-            # pending URL shapes trip the trap heuristics stop consuming
-            # budget this wave (operators/traps.py; rows stay pending, so
-            # a host that recovers is re-admitted automatically). The
-            # rollup is maintained INCREMENTALLY and at TOUCHED-HOST scope:
-            # fold this wave's enqueues onto only the hosts they touch
-            # (state pruned by a broadcast semi-join — scanned, never
-            # shuffled), then flag = re-flagged touched hosts ∪ the prior
-            # state's still-untouched flags. Feature extraction touches
-            # only O(wave) rows, the fold only O(touched-host) rows.
-            # the wave's enqueue partials feed BOTH the admission flag fold
-            # here and the commit fold below — computed and checkpointed
-            # once (per-URL feature extraction is the expensive part)
-            add_counts = tp.host_trap_counts(new_frontier_rows) \
+def _fetch_parse_dedup(cfg: CrawlConfig, st: WaveState,
+                       w: SimpleNamespace) -> None:
+    """Phase: re-hydrate the batch's card metadata (J2, O(wave)), fetch and
+    parse it, and insert-dedup the stored articles against the catalog."""
+    batch_meta = hydrate_batch(w.batch, w.cand_all)
+    # fetch_parse returns a lazily-checkpointed frame (never .cache():
+    # cache is logical-plan-keyed and aliases across invocations)
+    w.fetched, w.lineage = fetch_parse(cfg.pages, batch_meta,
+                                       return_lineage=True)
+    ok = w.fetched.filter(F.col("downloaded")).select(*ARTICLE_COLS)
+    w.new_articles = dd.tiered_insert_dedup(ok, seq_col="seq",
+                                            catalog=st.catalog)
+
+
+def _account(cfg: CrawlConfig, st: WaveState, w: SimpleNamespace) -> None:
+    """Phase: the wave's O(wave) change set, the status counters, the
+    shard layout to commit and the compaction decision."""
+    w.results = w.fetched.select(
+        scalars.canonical_url_hash(F.col("url")).alias("url_hash"),
+        F.col("downloaded").alias("success"),
+        F.when(~F.col("downloaded"), F.lit("fetch/parse/validate failed"))
+        .alias("error"),
+    )
+    # changed frontier rows = this wave's enqueues + prior rows with an
+    # outcome (batch ⊆ pending, so the semi-join key set IS the batch);
+    # record_results leaves unmatched rows untouched, so applying it to
+    # the changed subset produces exactly the rows a MERGE would write
+    changed = (w.new_rows if st.frontier_df is None
+               else w.new_rows.unionByName(st.frontier_df.join(
+                   F.broadcast(w.results.select("url_hash")),
+                   on="url_hash", how="left_semi")))
+    w.frontier_delta = fr.record_results(changed, w.results, w.now) \
+        .localCheckpoint(eager=False)  # consumers: commit, seen, count, traps
+    # terminal transitions happen exactly once per url_hash (done and
+    # retired rows never re-enter a batch), so seen deltas are appends
+    w.seen_delta = w.frontier_delta \
+        .filter(F.col("status") != fr.STATUS_PENDING) \
+        .select("url_hash", "url", "wave")
+
+    # per-wave status metrics, O(wave), BEFORE the commits:
+    # counts(w) = counts(w-1) + this delta's per-status rows − the
+    # prior rows it re-states. Every prior row in the delta was PENDING
+    # when the wave started (batch ⊆ eligible_pending and new enqueues
+    # carry wave == w, so `wave < w` identifies the prior rows), which
+    # makes the update exact: a retried row nets 0, a transition moves
+    # 1, an enqueue adds 1. Replaces a full frontier groupBy scan per
+    # wave — the same O(total)→O(wave) move as the delta commits. The
+    # ≤4-row collect is a bounded dimension, and it does double duty: it
+    # tells exactly which state tables this wave actually changed (empty
+    # deltas skip their commit job outright — a zero-row parquet write
+    # still costs a full job), and it materializes frontier_delta's lazy
+    # checkpoint so the pooled commit jobs read it instead of racing to
+    # compute it.
+    wave = w.wave
+    delta_agg = w.frontier_delta.groupBy("status").agg(
+        F.count(F.lit(1)).alias("n"),
+        F.sum(F.when(F.col("wave") < wave, 1).otherwise(0))
+        .alias("n_prior"),
+        # same-wave enqueues that were NOT fetched this wave: still
+        # pending with zero attempts (a fetched one is either terminal
+        # or carries attempts >= 1). Prior rows enter the delta only
+        # via the results semi-join, so every one of them HAS an
+        # outcome — n_outcomes below falls out of the same aggregate.
+        F.sum(F.when((F.col("wave") == wave) & (F.col("attempts") == 0),
+                     1).otherwise(0)).alias("n_virgin")).collect()
+    counts = st.status_counts
+    n_prior_changed = sum(r["n_prior"] for r in delta_agg)
+    counts[fr.STATUS_PENDING] = (
+        counts.get(fr.STATUS_PENDING, 0) - n_prior_changed)
+    for r in delta_agg:
+        counts[r["status"]] = counts.get(r["status"], 0) + r["n"]
+    w.n_delta = n_delta = sum(r["n"] for r in delta_agg)
+    w.n_enq = n_delta - n_prior_changed     # new frontier enqueues
+    w.n_term = sum(r["n"] for r in delta_agg   # pending-set departures
+                   if r["status"] != fr.STATUS_PENDING)
+    w.n_done = sum(r["n"] for r in delta_agg
+                   if r["status"] == fr.STATUS_DONE)
+    # fetch outcomes this wave = every delta row except the unfetched
+    # same-wave enqueues. The batch can be ENTIRELY same-wave rows
+    # (enqueue stamps next_eligible = now, so discoveries are admitted
+    # immediately) — n_prior_changed alone misses those.
+    w.n_outcomes = n_delta - sum(
+        r["n_virgin"] for r in delta_agg
+        if r["status"] == fr.STATUS_PENDING)
+    w.metrics = cfg.spark.createDataFrame(
+        [(s, n, wave) for s, n in sorted(counts.items()) if n != 0],
+        "status string, count long, wave int")
+
+    # shard layout this wave's seen_shards commit targets. "auto": size
+    # from the live seen count (terminal frontier rows — the exact row
+    # set the blobs are built from), grow-only against the stored
+    # layout so an established table never churns downward; the
+    # power-of-two snap in auto_shard_count makes growth a doubling
+    # event, so the one O(seen) rebuild per layout change amortizes to
+    # O(log growth) rebuilds total. Free: the counts are already
+    # maintained incrementally — no extra scan, no extra job.
+    w.ns_commit = cfg.n_shards
+    if w.ns_commit == "auto":
+        n_seen_now = (counts.get(fr.STATUS_DONE, 0)
+                      + counts.get(fr.STATUS_FAILED, 0))
+        w.ns_commit = max(w.stored_ns or 1,
+                          sn.auto_shard_count(n_seen_now,
+                                              cfg.shard_target_items))
+
+    # compaction. The first commit of a store, and the commit after a
+    # robots re-decoration, write the base. A fixed cadence compacts
+    # every compact_every-th wave — absolute wave number, so a resumed
+    # crawl compacts on the same schedule it would have uninterrupted.
+    # "auto" is the LSM size-ratio trigger: compact when the chain's
+    # accumulated delta rows (including this wave's) reach
+    # compact_frac_bp of the live frontier — so every base rewrite is
+    # amortized against the deltas that earned it — or when the chain
+    # hits the hard cap that bounds merge-on-read compose cost. Pure
+    # counter arithmetic; no extra jobs.
+    if st.frontier_df is None or st.frontier_needs_full:
+        w.is_full = True
+    elif cfg.compact_every == "auto":
+        w.is_full = bool(n_delta) and (
+            st.chain_len + 1 > cfg.compact_chain_cap
+            or (st.delta_since_full + n_delta) * 10000
+            >= sum(counts.values()) * cfg.compact_frac_bp)
+    else:
+        w.is_full = cfg.compact_every <= 1 or wave % cfg.compact_every == 0
+
+
+def _commit(cfg: CrawlConfig, st: WaveState, w: SimpleNamespace) -> None:
+    """Phase: commit this wave's state (checkpoint = resumability) as ONE
+    multi-table transaction.
+
+    The task list is built single-threaded (all plan construction on the
+    driver), then the per-table writes fan out over a small thread pool —
+    they are independent jobs on disjoint tables whose shared lazy
+    checkpoints are already materialized, and Spark schedules concurrent
+    jobs from one session natively, so the wave's ~9 commit barriers
+    overlap instead of serializing (the dominant small-wave fixed cost).
+    The wave pointer flips only after EVERY task (and phase_log) lands,
+    so a crash anywhere inside the pool rolls the whole wave back. Each
+    commit is a real materialization boundary, so timing it yields the
+    per-wave phase ledger the reference keeps
+    (science_crawler_main.py:268-281) — under the pool the per-phase
+    walls overlap, so they sum to more than the wave's commit wall."""
+    store, wave = cfg.store, w.wave
+    tasks: list[tuple[str, DataFrame, dict]] = []
+
+    def commit_task(df, name, **kw):
+        tasks.append((name, df, kw))
+
+    seen_all = (w.seen_delta if st.seen_df is None
+                else st.seen_df.unionByName(w.seen_delta))
+    if w.is_full:
+        # compaction: materialize full state (= what merge-on-read
+        # would compose) so the next delta chain starts from a fresh
+        # base. The frontier base partitions by (status,
+        # next_eligible_bucket) (⇔ Iceberg PARTITIONED BY): the per-wave
+        # admission scan prunes done/failed files AND pending files
+        # whose rows are backoff/trap-delayed into future buckets
+        # (audit-pinned PartitionFilters)
+        commit_task(fr.record_results(w.frontier_all, w.results, w.now),
+                    "frontier",
+                    partition_by=["status", "next_eligible_bucket"],
+                    meta={"rules_fp": cfg.rules_fp})
+        commit_task(w.new_articles if st.catalog is None
+                    else st.catalog.unionByName(w.new_articles), "articles")
+        commit_task(seen_all, "seen")
+        commit_task(w.cand_all, "candidates")
+    else:
+        # empty-delta skips: the account phase told us exactly what
+        # changed. A skipped table keeps its composed view from the last
+        # barrier (state identical), and resume restarts from the
+        # COMMITTED pointer, not latest_wave — so sparse per-table wave
+        # numbering is fine.
+        if w.n_delta:
+            # n_delta in the manifest: the auto-compaction resume seed
+            # reads the chain's row counts from committed state
+            commit_task(w.frontier_delta, "frontier",
+                        mode="delta", key=["url_hash"],
+                        meta={"rules_fp": cfg.rules_fp, "n_delta": w.n_delta})
+        if w.n_done:
+            commit_task(w.new_articles, "articles", mode="delta")
+        if w.n_term:
+            commit_task(w.seen_delta, "seen", mode="delta")
+        if w.n_enq:
+            commit_task(w.new_meta, "candidates", mode="delta")
+    shard_meta = {"n_shards": w.ns_commit, "filter_rev": sn.FILTER_REV}
+    if w.is_full or w.shards_df is None or w.stored_ns != w.ns_commit:
+        # a full build on compaction waves (headroom so the following
+        # delta waves can fold keys in place), and whenever the stored
+        # blobs cannot take a fold: no probe-able shard table (externally
+        # seeded store, or blobs of another kernel revision), a resume
+        # with a DIFFERENT n_shards, or an auto-shards growth event —
+        # incremental folds would OR keys into blobs laid out under the
+        # old modulus (persistent false negatives), so the whole table is
+        # rebuilt once under the current layout, O(seen) per change
+        commit_task(sn.build_shards(seen_all, w.ns_commit, headroom=2.0,
+                                    kind=cfg.filter_kind),
+                    "seen_shards", meta=shard_meta)
+    elif w.n_term:
+        # fold this wave's new keys into ONLY the shards they touch;
+        # untouched blobs are carried forward by the manifest, unread
+        commit_task(sn.update_shards(w.shards_df,
+                                     w.seen_delta.select("url_hash"),
+                                     seen_all, w.ns_commit, headroom=2.0,
+                                     kind=cfg.filter_kind),
+                    "seen_shards", mode="delta", key=["shard_id"],
+                    meta=shard_meta)
+
+    commit_task(w.metrics, "fetch_log")
+    # A3 / north rule: per-partition lineage + fetch/parse metrics are
+    # wave state too — committed so a resumed run keeps the full ledger
+    commit_task(w.lineage.withColumn("wave", F.lit(wave)), "lineage")
+    if cfg.adaptive_delay:
+        # AIMD politeness update from this wave's per-host outcomes;
+        # committed as wave state so resume keeps the learned delays.
+        # Only hosts WITH an outcome can change their delay, so the
+        # non-compaction commit is a keyed delta of exactly those rows
+        # (policy pruned by a broadcast semi-join on the wave's hosts —
+        # the host dimension is scanned, never shuffled or rewritten).
+        # Hosts first seen this wave without an outcome re-derive the
+        # same default row next wave, so not persisting them is exact.
+        # Compaction waves commit the full policy (incl. robots rows).
+        host_results = w.fetched.select(
+            scalars.url_host(F.col("url")).alias("host"),
+            F.col("downloaded").alias("success"))
+        if w.is_full or store.latest_wave("host_policy") is None:
+            commit_task(po.adapt_host_policy(w.policy, host_results),
+                        "host_policy")
+        elif w.n_outcomes:
+            touched = w.policy.join(
+                F.broadcast(host_results.select("host").distinct()),
+                on="host", how="left_semi")
+            commit_task(po.adapt_host_policy(touched, host_results),
+                        "host_policy", mode="delta", key=["host"])
+        # else: zero fetch outcomes this wave (prior OR same-wave
+        # rows) — no host's delay can change, so the delta would be
+        # empty; the stored policy stays current
+    if cfg.trap_guard:
+        # fold this wave's enqueues in and its pending-set departures
+        # (done/retired rows — retried rows stay pending and stay
+        # counted) out of the trap counts. Committed wave state,
+        # restored on resume; on non-compaction waves the commit is a
+        # keyed delta of ONLY the touched hosts — drained hosts ride
+        # along as n_urls = 0 tombstones (MERGE ... THEN DELETE), so
+        # the composed read drops them exactly like the full form.
+        # Full on compaction waves and whenever the stored base can't
+        # anchor a delta (fresh table / re-seeded state).
+        departed = w.frontier_delta.filter(
+            F.col("status") != fr.STATUS_PENDING).select("url")
+        if w.is_full or not st.trap_base_ok:
+            commit_task(tp.update_trap_state(
+                st.trap_state_df, added_counts=w.add_counts,
+                removed=departed), "trap_state")
+        elif w.n_enq or w.n_term:
+            commit_task(tp.update_trap_state(
+                st.trap_state_df, added_counts=w.add_counts,
+                removed=departed, touched_only=True),
+                "trap_state", mode="delta", key=["host"],
+                delete_where="n_urls = 0")
+        # else: no enqueues and no departures — no host's counts moved
+
+    # plan construction all happened above, on the driver thread; the
+    # pool threads only run write actions. Any failure propagates before
+    # the pointer flip, so the wave rolls back whole.
+    def run(task):
+        name, df, kw = task
+        t0 = time.perf_counter()
+        store.commit(df, name, wave, **kw)
+        return (wave, name, int((time.perf_counter() - t0) * 1000))
+
+    with ThreadPoolExecutor(max_workers=min(COMMIT_POOL, len(tasks))) as pool:
+        phase_ms = list(pool.map(run, tasks))
+    store.commit(
+        cfg.spark.createDataFrame(phase_ms, "wave int, phase string, ms long"),
+        "phase_log", wave)
+    # the wave's multi-table transaction boundary: every snapshot above
+    # becomes durable in ONE atomic pointer flip. Before this line a
+    # crash rolls the whole wave back (resume re-runs it); after it the
+    # wave can never tear. Must precede expiry — expiring first could
+    # drop the base a rollback of this very wave would need to compose.
+    store.mark_wave_committed(wave)
+    w.committed = {name for name, _, _ in tasks}
+
+
+def _advance(cfg: CrawlConfig, st: WaveState, w: SimpleNamespace) -> bool:
+    """Phase: carry the committed state into the next wave — re-read the
+    tables this wave changed, expire old snapshots — and decide
+    termination. Returns True when the crawl is done."""
+    store, spark = cfg.store, cfg.spark
+    # chain accounting for the NEXT wave's auto-compaction decision: a
+    # full resets the chain; a committed frontier delta extends it; a
+    # wave that skipped its frontier commit leaves it untouched
+    if w.is_full:
+        st.chain_len = st.delta_since_full = 0
+    elif w.n_delta:
+        st.chain_len += 1
+        st.delta_since_full += w.n_delta
+    st.frontier_needs_full = False  # a forced full has landed
+
+    # wave barrier: state views now come from the committed snapshots —
+    # but only tables this wave actually changed are re-read (re-reading
+    # an unchanged table would rebuild an identical compose plan; the
+    # retained view is the same state, so cross-wave lineage stays
+    # bounded either way)
+    for attr, table in VIEWS:
+        if table in w.committed:
+            setattr(st, attr, store.read(spark, table))
+    if cfg.adaptive_delay and "host_policy" in w.committed:
+        # consumed next wave by the missing-host anti-join, the policy
+        # union and the commit fold: checkpoint the composed read once
+        st.policy_df = store.read(spark, "host_policy") \
+            .localCheckpoint(eager=False)
+    if cfg.trap_guard:
+        st.trap_base_ok = True
+        if "trap_state" in w.committed:
+            # three consumers next wave (prune, flag union, commit
+            # fold): checkpoint the composed read once
+            st.trap_state_df = store.read(spark, "trap_state") \
                 .localCheckpoint(eager=False)
-            # checkpointed: two consumers (flag rows + touched-host key set)
-            pre_touched = tp.update_trap_state(
-                trap_state_df, added_counts=add_counts, touched_only=True) \
-                .localCheckpoint(eager=False)
-            flagged = pre_touched.filter(F.col("is_trap") == 1).select("host")
-            if trap_state_df is not None:
-                flagged = (trap_state_df.filter(F.col("is_trap") == 1)
-                           .select("host")
-                           .join(F.broadcast(pre_touched.select("host")),
-                                 on="host", how="left_anti")
-                           .unionByName(flagged))
-            # host-dimensioned build side: broadcast so the O(pending) left
-            # never sort-merge-shuffles past the auto-broadcast threshold
-            pending = pending.join(F.broadcast(flagged), on="host",
-                                   how="left_anti")
-        if adaptive_delay and policy_df is not None:
-            # adapted state from previous waves (or a resumed snapshot);
-            # hosts first seen this wave join at the same default a fresh
-            # policy would have given them, then adapt like the rest
-            fill_ms = (1000 if robots_policy is not None
-                       else po.DEFAULT_CRAWL_DELAY_MS)
-            missing = pending.select("host").distinct() \
-                .join(policy_df.select("host"), on="host", how="left_anti")
-            policy = policy_df.unionByName(
-                po.default_host_policy(spark, missing, crawl_delay_ms=fill_ms))
-        elif robots_policy is not None:
-            # hosts with no robots.txt fall back to a 1 s default delay
-            missing = pending.select("host").distinct() \
-                .join(robots_policy.select("host"), on="host", how="left_anti")
-            policy = robots_policy.unionByName(
-                po.default_host_policy(spark, missing, crawl_delay_ms=1000))
-        else:
-            policy = host_policy
-        batch = po.compose_wave(pending, policy, wave_seconds,
-                                robots_col="robots_ok")
-        if salt_buckets:
-            batch = fr.salt_partitions(batch, salt_buckets)
-        # two consumers below (hydration key set + join left side): lazy
-        # checkpoint stops the two-window admission plan re-executing
-        batch = batch.localCheckpoint(eager=False)
 
-        # --- fetch + parse (re-hydrate card metadata, J2, O(wave)) ---
-        batch_meta = hydrate_batch(batch, cand_all)
-        # fetch_parse returns a lazily-checkpointed frame (never .cache():
-        # cache is logical-plan-keyed and aliases across invocations)
-        fetched, lineage = fetch_parse(pages, batch_meta, return_lineage=True)
+    if cfg.expire_keep is not None:
+        # bound snapshot storage: per state table the store keeps the
+        # newest `keep` FULL snapshots + the deltas after the oldest
+        # kept full (≤ compact_every−1 of them, each O(wave)). Only the
+        # state tables expire — fetch_log / lineage / phase_log are
+        # per-wave ledgers whose history IS the data, never dropped.
+        for t in ("frontier", "articles", "seen", "candidates",
+                  "seen_shards", "host_policy", "trap_state"):
+            store.expire_snapshots(t, keep=cfg.expire_keep)
 
-        ok = fetched.filter(F.col("downloaded")).select(*ARTICLE_COLS)
-        new_articles = dd.tiered_insert_dedup(ok, seq_col="seq", catalog=catalog)
-
-        # --- bookkeeping: the wave's O(wave) change set ---
-        results = fetched.select(
-            scalars.canonical_url_hash(F.col("url")).alias("url_hash"),
-            F.col("downloaded").alias("success"),
-            F.when(~F.col("downloaded"), F.lit("fetch/parse/validate failed"))
-            .alias("error"),
-        )
-        # changed frontier rows = this wave's enqueues + prior rows with an
-        # outcome (batch ⊆ pending, so the semi-join key set IS the batch);
-        # record_results leaves unmatched rows untouched, so applying it to
-        # the changed subset produces exactly the rows a MERGE would write
-        changed = (new_frontier_rows if frontier_df is None
-                   else new_frontier_rows.unionByName(
-                       frontier_df.join(F.broadcast(results.select("url_hash")),
-                                        on="url_hash", how="left_semi")))
-        frontier_delta = fr.record_results(changed, results, logical_now) \
-            .localCheckpoint(eager=False)  # consumers: commit, seen, count, traps
-        # terminal transitions happen exactly once per url_hash (done and
-        # retired rows never re-enter a batch), so seen deltas are appends
-        seen_delta = frontier_delta \
-            .filter(F.col("status") != fr.STATUS_PENDING) \
-            .select("url_hash", "url", "wave")
-
-        # --- per-wave status metrics, O(wave), BEFORE the commits:
-        # counts(w) = counts(w-1) + this delta's per-status rows − the
-        # prior rows it re-states. Every prior row in the delta was PENDING
-        # when the wave started (batch ⊆ eligible_pending and new enqueues
-        # carry wave == w, so `wave < w` identifies the prior rows), which
-        # makes the update exact: a retried row nets 0, a transition moves
-        # 1, an enqueue adds 1. Seeded ONCE per process from the frontier
-        # (and re-seeded on resume from the actual state, so a crash
-        # between the frontier and fetch_log commits can never leave
-        # drift). Replaces a full frontier groupBy scan per wave — the same
-        # O(total)→O(wave) move as the delta commits. The ≤4-row collect
-        # is a bounded dimension, and it does double duty: it tells exactly
-        # which state tables this wave actually changed (empty deltas skip
-        # their commit job outright — a zero-row parquet write still costs
-        # a full job), and it materializes frontier_delta's lazy checkpoint
-        # so the pooled commit jobs below read it instead of racing to
-        # compute it.
-        if status_counts is None:
-            seed_df = (None if start_wave == 0 else
-                       store.read(spark, "frontier", as_of_wave=wave - 1))
-            status_counts = {} if seed_df is None else {
-                r["status"]: r["count"]
-                for r in seed_df.groupBy("status").count().collect()}
-        delta_agg = frontier_delta.groupBy("status").agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(F.when(F.col("wave") < wave, 1).otherwise(0))
-            .alias("n_prior"),
-            # same-wave enqueues that were NOT fetched this wave: still
-            # pending with zero attempts (a fetched one is either terminal
-            # or carries attempts >= 1). Prior rows enter the delta only
-            # via the results semi-join, so every one of them HAS an
-            # outcome — n_outcomes below falls out of the same aggregate.
-            F.sum(F.when((F.col("wave") == wave) & (F.col("attempts") == 0),
-                         1).otherwise(0)).alias("n_virgin")).collect()
-        n_prior_changed = sum(r["n_prior"] for r in delta_agg)
-        if n_prior_changed:
-            status_counts[fr.STATUS_PENDING] = (
-                status_counts.get(fr.STATUS_PENDING, 0) - n_prior_changed)
-        for r in delta_agg:
-            status_counts[r["status"]] = status_counts.get(r["status"], 0) + r["n"]
-        n_delta = sum(r["n"] for r in delta_agg)
-        n_enq = n_delta - n_prior_changed        # new frontier enqueues
-        n_term = sum(r["n"] for r in delta_agg   # pending-set departures
-                     if r["status"] != fr.STATUS_PENDING)
-        n_done = sum(r["n"] for r in delta_agg
-                     if r["status"] == fr.STATUS_DONE)
-        # fetch outcomes this wave = every delta row except the unfetched
-        # same-wave enqueues. The batch can be ENTIRELY same-wave rows
-        # (enqueue stamps next_eligible = logical_now, so discoveries are
-        # admitted immediately) — n_prior_changed alone misses those.
-        n_outcomes = n_delta - sum(
-            r["n_virgin"] for r in delta_agg
-            if r["status"] == fr.STATUS_PENDING)
-        metrics = spark.createDataFrame(
-            [(s, n, wave) for s, n in sorted(status_counts.items()) if n != 0],
-            "status string, count long, wave int")
-
-        # shard layout this wave's seen_shards commit targets. "auto": size
-        # from the live seen count (terminal frontier rows — the exact row
-        # set the blobs are built from), grow-only against the stored
-        # layout so an established table never churns downward; the
-        # power-of-two snap in auto_shard_count makes growth a doubling
-        # event, so the one O(seen) rebuild per layout change amortizes to
-        # O(log growth) rebuilds total. Free: status_counts is already
-        # maintained incrementally — no extra scan, no extra job.
-        if auto_shards:
-            n_seen_now = (status_counts.get(fr.STATUS_DONE, 0)
-                          + status_counts.get(fr.STATUS_FAILED, 0))
-            ns_commit = max(stored_ns or 1,
-                            sn.auto_shard_count(n_seen_now,
-                                                shard_target_items))
-        else:
-            ns_commit = n_shards
-
-        # auto-compaction: the LSM size-ratio trigger, finalized now that
-        # this wave's delta is counted. Compact when the chain's
-        # accumulated delta rows (including this wave's) reach
-        # compact_frac_bp of the live frontier — so every base rewrite is
-        # amortized against the deltas that earned it — or when the chain
-        # hits the hard cap that bounds merge-on-read compose cost. Pure
-        # counter arithmetic; no extra jobs.
-        if compact_auto and not is_full and n_delta:
-            total_rows = sum(status_counts.values())
-            is_full = (chain_len + 1 > compact_chain_cap
-                       or (delta_since_full + n_delta) * 10000
-                       >= total_rows * compact_frac_bp)
-
-        # commit this wave's state (checkpoint = resumability) as ONE
-        # multi-table transaction: the task list is built single-threaded
-        # (all plan construction on the driver), then the per-table writes
-        # fan out over a small thread pool — they are independent jobs on
-        # disjoint tables whose shared lazy checkpoints are already
-        # materialized, and Spark schedules concurrent jobs from one
-        # session natively, so the wave's ~9 commit barriers overlap
-        # instead of serializing (the dominant small-wave fixed cost).
-        # Durability is unchanged: the wave pointer flips only after EVERY
-        # task (and phase_log) lands, so a crash anywhere inside the pool
-        # rolls the whole wave back. Each commit is a real materialization
-        # boundary, so timing it yields the per-wave phase ledger the
-        # reference keeps (science_crawler_main.py:268-281) — under the
-        # pool the per-phase walls overlap, so they sum to more than the
-        # wave's commit wall.
-        tasks: list[tuple[str, DataFrame, dict]] = []
-
-        def commit_task(df, name, **kw):
-            tasks.append((name, df, kw))
-
-        seen_all = (seen_delta if seen_df is None
-                    else seen_df.unionByName(seen_delta))
-        if is_full:
-            # compaction: materialize full state (= what merge-on-read
-            # would compose) so the next delta chain starts from a fresh
-            # base. The frontier base partitions by status (⇔ Iceberg
-            # PARTITIONED BY): at a mostly-done 10^10-row frontier the
-            # eligible-pending admission scan then reads ONLY the pending
-            # files — the last full-table read per wave becomes
-            # partition-pruned (audit-pinned PartitionFilters)
-            # partition by (status, next_eligible_bucket): the per-wave
-            # admission scan prunes done/failed files AND pending files
-            # whose rows are backoff/trap-delayed into future buckets
-            commit_task(fr.record_results(frontier_all, results, logical_now),
-                        "frontier",
-                        partition_by=["status", "next_eligible_bucket"],
-                        meta={"rules_fp": rules_fp})
-            commit_task(new_articles if catalog is None
-                        else catalog.unionByName(new_articles), "articles")
-            commit_task(seen_all, "seen")
-            commit_task(cand_all, "candidates")
-            # headroom so the following delta waves can fold keys in place
-            commit_task(sn.build_shards(seen_all, ns_commit, headroom=2.0,
-                                        kind=filter_kind),
-                        "seen_shards", meta={"n_shards": ns_commit, "filter_rev": sn.FILTER_REV})
-        else:
-            # empty-delta skips: delta_agg told us exactly what changed.
-            # A skipped table keeps its composed view from the last barrier
-            # (state identical), and resume restarts from the COMMITTED
-            # pointer, not latest_wave — so sparse per-table wave numbering
-            # is fine.
-            if n_delta:
-                # n_delta in the manifest: the auto-compaction resume seed
-                # reads the chain's row counts from committed state
-                commit_task(frontier_delta, "frontier",
-                            mode="delta", key=["url_hash"],
-                            meta={"rules_fp": rules_fp, "n_delta": n_delta})
-            if n_done:
-                commit_task(new_articles, "articles", mode="delta")
-            if n_term:
-                commit_task(seen_delta, "seen", mode="delta")
-            if n_enq:
-                commit_task(new_meta, "candidates", mode="delta")
-            if shards_df is None or stored_ns != ns_commit:
-                # no shard table yet (externally seeded store), a layout
-                # predating the n_shards metadata, a resume with a
-                # DIFFERENT n_shards, or an auto-shards growth event:
-                # incremental folds would OR keys into blobs laid out
-                # under the old modulus (persistent false negatives) —
-                # rebuild the whole table once under the current layout,
-                # O(seen) exactly once per layout change
-                commit_task(sn.build_shards(seen_all, ns_commit, headroom=2.0,
-                                        kind=filter_kind),
-                            "seen_shards", meta={"n_shards": ns_commit, "filter_rev": sn.FILTER_REV})
-            elif n_term:
-                # fold this wave's new keys into ONLY the shards they touch;
-                # untouched blobs are carried forward by the manifest, unread
-                commit_task(sn.update_shards(shards_df,
-                                             seen_delta.select("url_hash"),
-                                             seen_all, ns_commit, headroom=2.0,
-                                             kind=filter_kind),
-                            "seen_shards", mode="delta", key=["shard_id"],
-                            meta={"n_shards": ns_commit, "filter_rev": sn.FILTER_REV})
-
-        commit_task(metrics, "fetch_log")
-        # A3 / north rule: per-partition lineage + fetch/parse metrics are
-        # wave state too — committed so a resumed run keeps the full ledger
-        commit_task(lineage.withColumn("wave", F.lit(wave)), "lineage")
-        if adaptive_delay:
-            # AIMD politeness update from this wave's per-host outcomes;
-            # committed as wave state so resume keeps the learned delays.
-            # Only hosts WITH an outcome can change their delay, so the
-            # non-compaction commit is a keyed delta of exactly those rows
-            # (policy pruned by a broadcast semi-join on the wave's hosts —
-            # the host dimension is scanned, never shuffled or rewritten).
-            # Hosts first seen this wave without an outcome re-derive the
-            # same default row next wave, so not persisting them is exact.
-            # Compaction waves commit the full policy (incl. robots rows).
-            host_results = fetched.select(
-                scalars.url_host(F.col("url")).alias("host"),
-                F.col("downloaded").alias("success"))
-            if is_full or store.latest_wave("host_policy") is None:
-                commit_task(po.adapt_host_policy(policy, host_results),
-                            "host_policy")
-            elif n_outcomes:
-                touched = policy.join(
-                    F.broadcast(host_results.select("host").distinct()),
-                    on="host", how="left_semi")
-                commit_task(po.adapt_host_policy(touched, host_results),
-                            "host_policy", mode="delta", key=["host"])
-            # else: zero fetch outcomes this wave (prior OR same-wave
-            # rows) — no host's delay can change, so the delta would be
-            # empty; the stored policy stays current
-        if trap_guard:
-            # fold this wave's enqueues in and its pending-set departures
-            # (done/retired rows — retried rows stay pending and stay
-            # counted) out of the trap counts. Committed wave state,
-            # restored on resume; on non-compaction waves the commit is a
-            # keyed delta of ONLY the touched hosts — drained hosts ride
-            # along as n_urls = 0 tombstones (MERGE ... THEN DELETE), so
-            # the composed read drops them exactly like the full form.
-            # Full on compaction waves and whenever the stored base can't
-            # anchor a delta (fresh table / re-seeded state).
-            departed = frontier_delta.filter(
-                F.col("status") != fr.STATUS_PENDING).select("url")
-            if is_full or not trap_base_ok:
-                commit_task(tp.update_trap_state(
-                    trap_state_df, added_counts=add_counts, removed=departed),
-                    "trap_state")
-            elif n_enq or n_term:
-                commit_task(tp.update_trap_state(
-                    trap_state_df, added_counts=add_counts, removed=departed,
-                    touched_only=True),
-                    "trap_state", mode="delta", key=["host"],
-                    delete_where="n_urls = 0")
-            # else: no enqueues and no departures — no host's counts moved
-
-        # fan the wave's independent per-table writes out over a small
-        # thread pool (plan construction all happened above, on the driver
-        # thread; the pool threads only run write actions). Any failure
-        # propagates before the pointer flip, so the wave rolls back whole.
-        def _run_commit(task):
-            name, df, kw = task
-            t0 = time.perf_counter()
-            store.commit(df, name, wave, **kw)
-            return (wave, name, int((time.perf_counter() - t0) * 1000))
-
-        # pool width is an ops knob (SPARK_GRAFT_COMMIT_POOL; 1 = the
-        # serialized legacy shape, kept for interleaved A/B measurement)
-        n_workers = min(int(os.environ.get("SPARK_GRAFT_COMMIT_POOL", "8")),
-                        len(tasks))
-        with ThreadPoolExecutor(max_workers=max(1, n_workers)) as pool:
-            phase_ms = list(pool.map(_run_commit, tasks))
-        store.commit(
-            spark.createDataFrame(phase_ms, "wave int, phase string, ms long"),
-            "phase_log", wave)
-        # the wave's multi-table transaction boundary: every snapshot above
-        # becomes durable in ONE atomic pointer flip. Before this line a
-        # crash rolls the whole wave back (resume re-runs it); after it the
-        # wave can never tear. Must precede expiry — expiring first could
-        # drop the base a rollback of this very wave would need to compose.
-        store.mark_wave_committed(wave)
-
-        # auto-compaction chain accounting for the NEXT wave's decision:
-        # a full resets the chain; a committed frontier delta extends it;
-        # a wave that skipped its frontier commit leaves it untouched
-        if compact_auto:
-            if is_full:
-                chain_len = delta_since_full = 0
-            elif n_delta:
-                chain_len += 1
-                delta_since_full += n_delta
-
-        # wave barrier: state views now come from the committed snapshots —
-        # but only tables this wave actually changed are re-read (re-reading
-        # an unchanged table would rebuild an identical compose plan; the
-        # retained view is the same state, so cross-wave lineage stays
-        # bounded either way)
-        committed_tables = {name for name, _, _ in tasks}
-        frontier_needs_full = False  # any forced schema-upgrade full landed
-        if "frontier" in committed_tables:
-            frontier_df = store.read(spark, "frontier")
-        if "articles" in committed_tables:
-            catalog = store.read(spark, "articles")
-        if "seen" in committed_tables:
-            seen_df = store.read(spark, "seen")
-        if "candidates" in committed_tables:
-            cand_store = store.read(spark, "candidates")
-        if adaptive_delay and "host_policy" in committed_tables:
-            # consumed next wave by the missing-host anti-join, the policy
-            # union and the commit fold: checkpoint the composed read once
-            policy_df = store.read(spark, "host_policy") \
-                .localCheckpoint(eager=False)
-        if trap_guard:
-            trap_base_ok = True
-            if "trap_state" in committed_tables:
-                # three consumers next wave (prune, flag union, commit
-                # fold): checkpoint the composed read once
-                trap_state_df = store.read(spark, "trap_state") \
-                    .localCheckpoint(eager=False)
-
-        if expire_keep is not None:
-            # bound snapshot storage: per state table the store keeps the
-            # newest `keep` FULL snapshots + the deltas after the oldest
-            # kept full (≤ compact_every−1 of them, each O(wave)). Only the
-            # state tables expire — fetch_log / lineage / phase_log are
-            # per-wave ledgers whose history IS the data, never dropped.
-            for t in ("frontier", "articles", "seen", "candidates",
-                      "seen_shards", "host_policy", "trap_state"):
-                store.expire_snapshots(t, keep=expire_keep)
-
-        n_pending = status_counts.get(fr.STATUS_PENDING, 0)
-        if n_pending == 0:
-            break
-        if n_delta == 0:
-            # nothing changed this wave (no discoveries, no admissions —
-            # e.g. every eligible host is trap-contained; n_delta comes
-            # free from the metrics aggregate). If no pending row
-            # is waiting on a future next_eligible either, the state is at a
-            # fixpoint: later waves would replay this one forever. Stop
-            # instead of burning max_waves empty barriers (rows stay
-            # pending, so a corpus change on the next crawl() re-admits).
-            n_future = frontier_df.filter(
-                (F.col("status") == fr.STATUS_PENDING)
-                & (F.col("next_eligible") > F.lit(logical_now).cast("timestamp"))
-            ).count()
-            if n_future == 0:
-                break
-
-    return catalog.orderBy("seq") if catalog is not None else None
+    if st.status_counts.get(fr.STATUS_PENDING, 0) == 0:
+        return True
+    # nothing changed this wave (no discoveries, no admissions — e.g.
+    # every eligible host is trap-contained; n_delta comes free from the
+    # account aggregate)? If no pending row is waiting on a future
+    # next_eligible either, the state is at a fixpoint: later waves would
+    # replay this one forever. Stop instead of burning max_waves empty
+    # barriers (rows stay pending, so a corpus change on the next crawl()
+    # re-admits).
+    return w.n_delta == 0 and st.frontier_df.filter(
+        (F.col("status") == fr.STATUS_PENDING)
+        & (F.col("next_eligible") > F.lit(w.now).cast("timestamp"))
+    ).count() == 0

@@ -15,6 +15,8 @@ merely *sized down* for local[32]:
 - ANSI mode stays ON (Spark 4 default); kernels use try_* variants where the
   reference semantics are "NULL on failure" (e.g. date parsing,
   reference src/link_collector.py:286-296).
+- console progress bars off, so the tools' stdout/stderr carry only their
+  own output.
 """
 
 from __future__ import annotations
@@ -48,5 +50,8 @@ def get_spark(app_name: str = "s_crawler_spark",
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
+        # no console progress bars: stderr stays readable and tool output
+        # that captures both streams (bench.py's JSON line) stays clean
+        .config("spark.ui.showConsoleProgress", "false")
     )
     return builder.getOrCreate()

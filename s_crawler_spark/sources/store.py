@@ -56,18 +56,29 @@ Commit protocol (crash-safe, idempotent — SURVEY.md §7 hard part #5):
    overwrite, like an idempotent MERGE);
 2. atomically rename a temp manifest over ``root/table/MANIFEST.json``
    pointing at the new snapshot. Readers only ever see a fully-written
-   snapshot.
+   snapshot;
+3. after a wave's last table commit, atomically rename ``COMMITTED.json``
+   (the wave pointer, stamped with ``FORMAT_VERSION``) at the store root.
+
+A store has exactly one format: the one this module writes. Resume
+refuses a store without a pointer of this format instead of guessing at
+or upgrading an older layout.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import shutil
 import tempfile
 from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+
+# layout version stamped into every wave pointer; rollback_to_committed
+# refuses any other value
+FORMAT_VERSION = 1
 
 
 class SnapshotStore:
@@ -108,13 +119,6 @@ class SnapshotStore:
     # the committed boundary (commits are wave-keyed idempotent overwrites,
     # built for exactly this re-run).
 
-    # tables the crawl loop commits EVERY wave regardless of feature flags —
-    # the legacy-store fallback (no pointer file) infers the newest COMPLETE
-    # wave as the min of their latest waves (flag-gated tables like
-    # host_policy / trap_state may legitimately lag and are excluded)
-    WAVE_TABLES = ("frontier", "articles", "seen", "candidates",
-                   "seen_shards", "fetch_log", "lineage", "phase_log")
-
     def _committed_path(self) -> str:
         return os.path.join(self.root, "COMMITTED.json")
 
@@ -122,100 +126,72 @@ class SnapshotStore:
         """Atomically advance the durable wave pointer: every per-table
         snapshot of ``wave`` is now acknowledged as one transaction. Call
         AFTER the wave's last per-table commit and BEFORE expiry (expiring
-        first could drop the base a rollback of this wave would need)."""
+        first could drop the base a rollback of this wave would need).
+
+        The pointer also stamps the store's ``FORMAT_VERSION``. An external
+        seeder that commits tables itself (e.g. a hand-built frontier)
+        calls this once with its last seeded wave before the first
+        ``crawl()`` over the store."""
         fd, tmp = tempfile.mkstemp(dir=self.root, suffix=".tmp")
         with os.fdopen(fd, "w") as f:
-            json.dump({"wave": wave}, f)
+            json.dump({"wave": wave, "format": FORMAT_VERSION}, f)
         os.replace(tmp, self._committed_path())
 
-    def committed_wave(self) -> int | None:
-        """Newest durably-committed wave, or None (fresh or legacy store)."""
+    def _pointer(self) -> dict:
+        """The wave pointer's content ({} before the first flip)."""
         try:
             with open(self._committed_path()) as f:
-                return json.load(f)["wave"]
+                return json.load(f)
         except FileNotFoundError:
-            return None
+            return {}
+
+    def committed_wave(self) -> int | None:
+        """Newest durably-committed wave, or None (no pointer yet)."""
+        return self._pointer().get("wave")
 
     def rollback_to_committed(self) -> int | None:
         """Drop every snapshot of every table newer than the committed wave
         pointer (torn by a mid-wave crash — never acknowledged, so removing
         them is invisible to any reader that followed the protocol), and
-        return the committed wave (None = nothing committed: the store is
-        fresh, or the crash landed inside wave 0 / a legacy store's very
-        first wave — resume restarts from wave 0).
+        return the committed wave (−1 = the crash landed inside wave 0).
 
-        Legacy stores (predating the pointer file) fall back to
-        ``min(latest_wave(t))`` over the WAVE_TABLES that exist: the old
-        loop committed that whole set every wave (frontier FIRST), so the
-        min over the present ones is the newest wave whose commits all
-        landed — which also heals a legacy store torn by the old
-        frontier-first protocol (the orphaned frontier snapshot is rolled
-        back and the wave re-runs instead of losing its articles), and
-        leaves an externally-seeded store (a frontier committed directly,
-        no sibling tables yet) untouched. The one case the fallback cannot
-        see — a legacy store torn inside its very FIRST wave, before some
-        sibling table existed at all — is closed for every pointer-era
-        store: the crawl loop arms the pointer (wave −1) before its first
-        commit.
+        Returns None on an empty store. Any other store must carry a
+        pointer of this ``FORMAT_VERSION``: a store with tables but no
+        pointer, or with a pointer of another format, raises and nothing
+        is deleted — the store has one format and no upgrade paths.
         """
-        import shutil
-
-        cw = self.committed_wave()
-        inferred = cw is None
-        if cw is None:
-            waves = [w for w in (self.latest_wave(t) for t in self.WAVE_TABLES)
-                     if w is not None]
-            cw = min(waves) if waves else None
-        if cw is None:
-            # no pointer AND no loop-written wave tables: the loop never ran
-            # on this store (it arms the pointer before its very first
-            # commit), so every snapshot present — e.g. a pre-seeded
-            # host_policy dimension — is external seeding, not a torn wave.
-            # Nothing to roll back; dropping them would silently delete
-            # user data on the default resume=True path.
+        pointer = self._pointer()
+        if not pointer and not self.tables():
             return None
-        if inferred:
-            # the min() inference is only sound for true legacy stores —
-            # the pre-delta loop committed every WAVE_TABLE every wave, so
-            # min = the newest fully-landed wave. A pointer-less store
-            # containing ANY delta snapshot was written by the sparse-
-            # commit loop (which always arms the pointer): its per-table
-            # numbering legitimately lags (unchanged tables skip commits),
-            # so min() would land on an OLD wave and rmtree durably
-            # committed snapshots — and with expiry in play could strand a
-            # table past its only surviving full base. Fail safe instead.
-            would_drop = any(s["wave"] > cw
-                             for t in self.tables()
-                             for s in self.snapshots(t))
-            has_delta = any(s.get("mode", "full") == "delta"
-                            for t in self.tables()
-                            for s in self.snapshots(t))
-            if would_drop and has_delta:
-                raise RuntimeError(
-                    "store has delta snapshots but no COMMITTED.json wave "
-                    "pointer (lost in a partial copy?): refusing the "
-                    "legacy min-wave rollback, which would delete "
-                    "committed sparse-numbered snapshots. Restore the "
-                    "pointer file, or write one naming the last known "
-                    "good wave, and resume again.")
+        if pointer.get("format") != FORMAT_VERSION:
+            raise RuntimeError(
+                f"store {self.root!r}: wave pointer {pointer or None!r} is "
+                f"not format {FORMAT_VERSION}; a hand-seeded store must call "
+                "mark_wave_committed(<last seeded wave>) after its commits")
+        cw = pointer["wave"]
         for t in self.tables():
-            manifest = self._load_manifest(t)
-            snaps = manifest["snapshots"]
+            snaps = self.snapshots(t)
             kept = [s for s in snaps if s["wave"] <= cw]
-            if len(kept) == len(snaps):
-                continue
-            manifest["snapshots"] = kept
-            # manifest first (atomic rename), THEN delete dirs: a kill in
-            # between leaves only unreferenced orphan dirs, which the torn
-            # wave's re-run overwrites (same snap id over the pruned
-            # manifest) — never a manifest pointing at deleted files
-            self._write_manifest(t, manifest)
-            live = {os.path.basename(s["path"]) for s in kept}
-            tdir = os.path.join(self.root, t)
-            for d in os.listdir(tdir):
-                if d.startswith("snap-") and d not in live:
-                    shutil.rmtree(os.path.join(tdir, d), ignore_errors=True)
+            if len(kept) < len(snaps):
+                # the torn wave's re-run overwrites any orphan dir a kill
+                # inside _keep_only leaves (same snap id)
+                self._keep_only(t, kept)
         return cw
+
+    def _keep_only(self, table: str, kept: list[dict]) -> None:
+        """Cut ``table``'s manifest down to ``kept``, then delete every
+        snapshot dir it no longer references. Manifest FIRST (atomic
+        rename), so readers never see a dropped entry and a kill in
+        between leaves only unreferenced orphan dirs, never a manifest
+        pointing at deleted files. Dirs are compared by BASENAME, so a
+        store opened via a differently-spelled root ("./data" vs "data")
+        never mistakes live snapshots for orphans."""
+        self._write_manifest(table, {"snapshots": kept})
+        live = {os.path.basename(s["path"]) for s in kept}
+        tdir = os.path.join(self.root, table)
+        for d in os.listdir(tdir):  # includes prior-crash orphans
+            if d.startswith("snap-") and d not in live:
+                shutil.rmtree(os.path.join(tdir, d), ignore_errors=True)
 
     # -- public API ----------------------------------------------------------
     def commit(self, df: DataFrame, table: str, wave: int,
@@ -283,8 +259,6 @@ class SnapshotStore:
         # resolves it against the CURRENT root (_snap_dir), so persisting
         # the writer's absolute path would be a misleading second source
         # of truth that breaks the moment a store directory is copied.
-        # (_snap_dir basenames defensively, so manifests written by older
-        # absolute-path builds keep reading correctly.)
         entry = {"id": snap_id, "wave": wave, "path": f"snap-{snap_id}",
                  "mode": mode, "meta": meta or {}}
         if key is not None:
@@ -387,14 +361,12 @@ class SnapshotStore:
 
     def _snap_dir(self, table: str, entry: dict) -> str:
         """A snapshot entry's directory resolved against THIS store's root.
-        Manifests record the snapshot dir basename (older builds recorded
-        the writer's absolute path), and a store directory must be
-        relocatable — backup/restore and crash-copy resume read a COPY of
-        the root, and following a stored absolute path would read (or
-        dangle on) the original writer's files. Reads therefore join the
+        Manifests record the snapshot dir basename, and a store directory
+        must be relocatable — backup/restore and crash-copy resume read a
+        COPY of the root, and following a stored absolute path would read
+        (or dangle on) the original writer's files. Reads therefore join the
         entry's basename onto the current root — the same rule
-        ``expire_snapshots``/``rollback_to_committed`` already use when
-        deleting orphans."""
+        ``_keep_only`` (expiry and rollback) uses when deleting orphans."""
         return os.path.join(self.root, table, os.path.basename(entry["path"]))
 
     def read(self, spark: SparkSession, table: str,
@@ -476,13 +448,10 @@ class SnapshotStore:
         directories are deleted — a crash in between leaves unreachable
         dirs that the next expiry removes. Returns snapshots expired.
         """
-        import shutil
-
         keep = max(1, keep)
         n = 0
         for t in ([table] if table is not None else self.tables()):
-            manifest = self._load_manifest(t)
-            snaps = manifest["snapshots"]
+            snaps = self.snapshots(t)
             full_idx = [i for i, s in enumerate(snaps)
                         if s.get("mode", "full") == "full"]
             # cutoff = first index to keep: the keep-th-newest full snapshot
@@ -490,16 +459,6 @@ class SnapshotStore:
             cutoff = full_idx[-keep] if len(full_idx) >= keep else 0
             if cutoff == 0:
                 continue
-            kept, dropped = snaps[cutoff:], snaps[:cutoff]
-            manifest["snapshots"] = kept
-            self._write_manifest(t, manifest)
-            # compare by snapshot BASENAME, not full path: a store opened
-            # via a differently-spelled root ("./data" vs "data") must not
-            # mistake live snapshots for orphans
-            live = {os.path.basename(s["path"]) for s in kept}
-            tdir = os.path.join(self.root, t)
-            for d in os.listdir(tdir):  # includes prior-crash orphans
-                if d.startswith("snap-") and d not in live:
-                    shutil.rmtree(os.path.join(tdir, d), ignore_errors=True)
-            n += len(dropped)
+            self._keep_only(t, snaps[cutoff:])
+            n += cutoff
         return n

@@ -18,6 +18,7 @@ behind), then every torn copy is resumed and must reproduce the
 uninterrupted crawl's catalog, frontier, and learned policy exactly.
 """
 
+import json
 import os
 import shutil
 import threading
@@ -28,7 +29,7 @@ from pyspark.sql import functions as F
 from s_crawler_spark.corpus import seed_search_url
 from s_crawler_spark.plans.reference_sim import simulate_crawl
 from s_crawler_spark.plans.wave import crawl
-from s_crawler_spark.sources.store import SnapshotStore
+from s_crawler_spark.sources.store import FORMAT_VERSION, SnapshotStore
 from test_wave_parity import assert_parity
 
 # full production composition: every state table in play, including the
@@ -36,6 +37,22 @@ from test_wave_parity import assert_parity
 # FULL wave (0), a DELTA wave (1) and a COMPACTION wave (2) all in scope
 KW = dict(wave_seconds=100, n_shards=4,
           adaptive_delay=True, trap_guard=True, compact_every=2)
+
+# the per-table (wave, mode) manifest sequence a KW crawl of the test corpus
+# commits: which waves compact, which commit deltas, and which tables skip
+# a wave because nothing in them changed (candidates on wave 1)
+KW_COMMITS = {
+    "articles": [(0, "full"), (1, "delta"), (2, "full")],
+    "candidates": [(0, "full"), (2, "full")],
+    "fetch_log": [(0, "full"), (1, "full"), (2, "full")],
+    "frontier": [(0, "full"), (1, "delta"), (2, "full")],
+    "host_policy": [(0, "full"), (1, "delta"), (2, "full")],
+    "lineage": [(0, "full"), (1, "full"), (2, "full")],
+    "phase_log": [(0, "full"), (1, "full"), (2, "full")],
+    "seen": [(0, "full"), (1, "delta"), (2, "full")],
+    "seen_shards": [(0, "full"), (1, "delta"), (2, "full")],
+    "trap_state": [(0, "full"), (1, "delta"), (2, "full")],
+}
 
 
 class CopyOnCommitStore(SnapshotStore):
@@ -77,12 +94,31 @@ def policy_state(spark, store):
                   for r in store.read(spark, "host_policy").collect())
 
 
+@pytest.fixture(scope="module")
+def ref_crawl(spark, pages, tmp_path_factory):
+    """One KW crawl run to completion on a CopyOnCommitStore: its store
+    (with the per-commit copies) and its catalog rows."""
+    root = tmp_path_factory.mktemp("matrix")
+    rec = CopyOnCommitStore(str(root / "ref"), str(root / "copies"))
+    cat = crawl(spark, pages, seed_search_url(), rec, max_waves=30, **KW)
+    return rec, cat.collect()
+
+
+def test_crash_matrix_composition_commit_sequence(ref_crawl):
+    """The composed crawl commits the same per-table snapshot sequence —
+    the same compaction, delta and empty-delta skip decisions — as the
+    loop that KW_COMMITS was recorded from."""
+    rec, _ = ref_crawl
+    got = {t: [(s["wave"], s["mode"]) for s in rec.snapshots(t)]
+           for t in rec.tables()}
+    assert got == KW_COMMITS
+
+
 def test_resume_after_crash_between_every_adjacent_commit_pair(
-        spark, pages, pages_dict, tmp_path):
+        spark, pages, pages_dict, ref_crawl):
     sim, _ = simulate_crawl(pages_dict, seed_search_url(), max_count=10**9)
-    rec = CopyOnCommitStore(str(tmp_path / "ref"), str(tmp_path / "copies"))
-    cat_ref = crawl(spark, pages, seed_search_url(), rec, max_waves=30, **KW)
-    assert_parity(cat_ref.collect(), sim)
+    rec, cat_ref = ref_crawl
+    assert_parity(cat_ref, sim)
     n_waves = rec.latest_wave("frontier") + 1
     assert n_waves >= 3  # full + delta + compaction waves all exercised
     ref_frontier = frontier_state(spark, rec)
@@ -170,33 +206,9 @@ def test_rollback_drops_only_uncommitted(spark, tmp_path):
     assert sorted(d for d in dirs if d.startswith("snap-")) == ["snap-0"]
 
 
-def test_rollback_legacy_store_infers_min_wave(spark, tmp_path):
-    """A store predating the pointer file: the newest COMPLETE wave is the
-    min of the unconditional tables' latest waves — which also heals a
-    legacy store torn by the old frontier-FIRST commit order."""
-    st = SnapshotStore(str(tmp_path / "legacy"))
-    one = spark.range(1).select(F.lit("a").alias("k"))
-    for t in SnapshotStore.WAVE_TABLES:
-        st.commit(one, t, 0)
-    st.commit(one, "frontier", 1)  # old protocol: frontier first, then kill
-    assert st.committed_wave() is None
-    assert st.rollback_to_committed() == 0
-    assert st.latest_wave("frontier") == 0
-
-
-def test_rollback_preserves_external_frontier_seed(spark, tmp_path):
-    """An externally-seeded store (a frontier committed directly, no
-    sibling tables) is not a torn wave — the seed must survive rollback."""
-    st = SnapshotStore(str(tmp_path / "seeded"))
-    one = spark.range(1).select(F.lit("a").alias("k"))
-    st.commit(one, "frontier", 0)
-    assert st.rollback_to_committed() == 0
-    assert st.latest_wave("frontier") == 0
-
-
 def test_relocated_store_reads_its_own_files(spark, tmp_path):
-    """Manifests record the writer's absolute snapshot paths, but reads
-    must resolve against the CURRENT root: a copied store (backup/restore,
+    """Reads resolve each manifest entry's snapshot dir against the
+    CURRENT root: a copied store (backup/restore,
     crash-copy resume) read from its new location must never follow the
     stored path back into the original root — with the original deleted
     that dangles (PATH_NOT_FOUND), and with it alive it silently reads
@@ -223,21 +235,6 @@ def test_rollback_empty_store_is_noop(tmp_path):
     assert st.committed_wave() is None
 
 
-def test_rollback_preserves_nonwave_only_seed(spark, tmp_path):
-    """A store holding ONLY non-wave tables (e.g. a pre-seeded host_policy
-    dimension, committed before the loop ever ran) has no pointer and no
-    WAVE_TABLES to infer one from — that is external seeding, not a torn
-    wave. rollback (which crawl's default resume=True always runs first)
-    must leave it untouched, not wipe it."""
-    st = SnapshotStore(str(tmp_path / "dims"))
-    one = spark.range(1).select(F.lit("h").alias("host"))
-    st.commit(one, "host_policy", 0)
-    st.commit(one, "trap_state", 3)
-    assert st.rollback_to_committed() is None
-    assert st.latest_wave("host_policy") == 0
-    assert st.latest_wave("trap_state") == 3
-
-
 def test_armed_pointer_rolls_back_torn_wave_zero(spark, tmp_path):
     """crawl() arms the pointer at −1 before its first commit, so a kill
     inside wave 0 (some tables committed, pointer never flipped) must roll
@@ -252,36 +249,118 @@ def test_armed_pointer_rolls_back_torn_wave_zero(spark, tmp_path):
     assert st.latest_wave("articles") is None
 
 
-def test_pointerless_delta_store_refuses_min_wave_rollback(spark, tmp_path):
-    """The min(latest_wave) fallback is only sound for true legacy stores
-    (pre-delta loop: every WAVE_TABLE committed every wave). A store with
-    DELTA snapshots was written by the sparse-commit loop, whose per-table
-    numbering legitimately lags — if its pointer is lost (partial copy),
-    min() would land on an old wave and DELETE durably committed
-    snapshots. Rollback must refuse instead of destroying data; a no-op
-    fallback (nothing newer than min) stays allowed."""
-    st = SnapshotStore(str(tmp_path / "sparse"))
+def _tree_bytes(root):
+    out = {}
+    for base, _, files in os.walk(root):
+        for f in files:
+            path = os.path.join(base, f)
+            with open(path, "rb") as fh:
+                out[os.path.relpath(path, root)] = fh.read()
+    return out
+
+
+def test_rollback_preserves_external_frontier_seed(spark, tmp_path):
+    """An externally-seeded store (a frontier committed directly, no
+    sibling tables) is not a torn wave — the seed must survive rollback.
+    Without a pointer rollback refuses and deletes nothing; once the
+    seeder marks its last wave committed, rollback keeps the seed."""
+    root = str(tmp_path / "seeded")
+    st = SnapshotStore(root)
     one = spark.range(1).select(F.lit("a").alias("k"))
-    for t in SnapshotStore.WAVE_TABLES:
+    st.commit(one, "frontier", 0)
+    before = _tree_bytes(root)
+    with pytest.raises(RuntimeError, match="mark_wave_committed"):
+        st.rollback_to_committed()
+    assert _tree_bytes(root) == before
+    assert st.latest_wave("frontier") == 0
+    st.mark_wave_committed(0)
+    assert st.rollback_to_committed() == 0
+    assert st.latest_wave("frontier") == 0
+
+
+def test_rollback_preserves_nonwave_only_seed(spark, tmp_path):
+    """A store holding ONLY non-frontier tables (e.g. a pre-seeded
+    host_policy dimension, committed before the loop ever ran) has no
+    pointer — that is external seeding, not a torn wave. rollback (which
+    crawl's default resume=True always runs first) must not wipe it: it
+    refuses and deletes nothing, and once the seeder marks its last wave
+    committed every seeded snapshot survives."""
+    root = str(tmp_path / "dims")
+    st = SnapshotStore(root)
+    one = spark.range(1).select(F.lit("h").alias("host"))
+    st.commit(one, "host_policy", 0)
+    st.commit(one, "trap_state", 3)
+    before = _tree_bytes(root)
+    with pytest.raises(RuntimeError, match="mark_wave_committed"):
+        st.rollback_to_committed()
+    assert _tree_bytes(root) == before
+    assert st.latest_wave("host_policy") == 0
+    assert st.latest_wave("trap_state") == 3
+    st.mark_wave_committed(3)
+    assert st.rollback_to_committed() == 3
+    assert st.latest_wave("host_policy") == 0
+    assert st.latest_wave("trap_state") == 3
+
+
+def test_pointerless_delta_store_refuses_min_wave_rollback(spark, tmp_path):
+    """A store whose pointer is lost (partial copy) has per-table waves
+    that legitimately lag — a min(latest_wave) guess would land on an old
+    wave and DELETE durably committed snapshots. Rollback refuses instead,
+    for a store with delta snapshots and for an all-full one alike, and
+    deletes nothing; with the pointer restored the same store rolls back
+    fine."""
+    root = str(tmp_path / "sparse")
+    st = SnapshotStore(root)
+    one = spark.range(1).select(F.lit("a").alias("k"))
+    for t in ("frontier", "articles", "seen"):
         st.commit(one, t, 0)
-    # sparse delta era: only the frontier moved on waves 1-2
+    # sparse delta waves: only the frontier moved on waves 1-2
     st.commit_delta(one, "frontier", wave=1, key=["k"])
     st.commit_delta(one, "frontier", wave=2, key=["k"])
-    os.remove(os.path.join(str(tmp_path / "sparse"), "COMMITTED.json")) \
-        if os.path.exists(os.path.join(str(tmp_path / "sparse"),
-                                       "COMMITTED.json")) else None
-    with pytest.raises(RuntimeError, match="delta snapshots but no"):
+    before = _tree_bytes(root)
+    with pytest.raises(RuntimeError, match="mark_wave_committed"):
         st.rollback_to_committed()
-    # with the pointer restored the same store rolls back fine
+    assert _tree_bytes(root) == before
     st.mark_wave_committed(1)
     assert st.rollback_to_committed() == 1
     assert st.latest_wave("frontier") == 1
 
-    # all-full legacy store: the fallback still works (and still heals
-    # the old frontier-first torn wave)
-    lg = SnapshotStore(str(tmp_path / "legacy2"))
-    for t in SnapshotStore.WAVE_TABLES:
+    # all-full store with no pointer: refused too, nothing dropped
+    lg_root = str(tmp_path / "full")
+    lg = SnapshotStore(lg_root)
+    for t in ("frontier", "articles", "seen"):
         lg.commit(one, t, 0)
-    lg.commit(one, "frontier", 1)  # torn frontier-first wave 1
-    assert lg.rollback_to_committed() == 0
-    assert lg.latest_wave("frontier") == 0
+    lg.commit(one, "frontier", 1)
+    before = _tree_bytes(lg_root)
+    with pytest.raises(RuntimeError, match="mark_wave_committed"):
+        lg.rollback_to_committed()
+    assert _tree_bytes(lg_root) == before
+    assert lg.latest_wave("frontier") == 1
+
+
+@pytest.mark.parametrize("pointer", [
+    {"wave": 1},                                 # a pointer without format
+    {"wave": 1, "format": FORMAT_VERSION + 1},   # another format
+], ids=["no_format", "wrong_format"])
+def test_rollback_refuses_store_without_current_format(spark, tmp_path,
+                                                       pointer):
+    """The store has one format: rollback_to_committed (which a resuming
+    crawl runs first) refuses a store whose pointer is not of this
+    FORMAT_VERSION — from another build or hand-written — and deletes
+    nothing. Every table here has snapshots past wave 1 that a rollback
+    to the pointer would drop."""
+    root = str(tmp_path / "s")
+    st = SnapshotStore(root)
+    one = spark.range(1).select(F.lit("a").alias("k"))
+    st.commit(one, "frontier", 0)
+    st.commit_delta(one, "frontier", wave=1, key=["k"])
+    st.commit_delta(one, "frontier", wave=2, key=["k"])
+    st.commit(one, "host_policy", 0)
+    st.commit(one, "trap_state", 3)
+    with open(os.path.join(root, "COMMITTED.json"), "w") as f:
+        json.dump(pointer, f)
+    before = _tree_bytes(root)
+    with pytest.raises(RuntimeError, match="mark_wave_committed"):
+        st.rollback_to_committed()
+    assert _tree_bytes(root) == before
+    assert st.committed_wave() == pointer["wave"]

@@ -279,35 +279,6 @@ def test_adaptive_delay_crawl(spark, pages, pages_dict, tmp_path):
     assert all(pol_end[h] <= d for h, d in pol_mid.items() if h in pol_end)
 
 
-def test_legacy_store_without_robots_ok_migrates_on_resume(spark, pages,
-                                                           pages_dict,
-                                                           tmp_path):
-    """A store written before the stored robots bit (frontier has no
-    robots_ok column) must keep resuming: the loop decorates the composed
-    frontier once with the current rules, forces the next frontier commit
-    FULL (a delta would union mismatched schemas onto the legacy base),
-    and the finished crawl still matches the reference byte for byte."""
-    from pyspark.sql import functions as F
-    sim, _ = simulate_crawl(pages_dict, seed_search_url(), max_count=10**9)
-    store = SnapshotStore(str(tmp_path / "legacy"))
-    crawl(spark, pages, seed_search_url(), store, wave_seconds=100,
-          max_waves=2, n_shards=4)
-    lw = store.latest_wave("frontier")
-    legacy = store.read(spark, "frontier").drop("robots_ok")
-    # overwrite the latest snapshot with a legacy-shaped FULL (pre-upgrade
-    # stores committed the full frontier without the column)
-    store.commit(legacy, "frontier", lw, partition_by=["status"])
-    assert "robots_ok" not in store.read(spark, "frontier").columns
-    cat = crawl(spark, pages, seed_search_url(), store, wave_seconds=100,
-                max_waves=30, n_shards=4)
-    assert_parity(cat.collect(), sim)
-    migrated = store.read(spark, "frontier")
-    assert "robots_ok" in migrated.columns
-    assert migrated.filter(F.col("robots_ok").isNull()).count() == 0
-    resumed = [s for s in store.snapshots("frontier") if s["wave"] == lw + 1]
-    assert resumed and resumed[0]["mode"] == "full"
-
-
 def test_resume_rescans_discovery_once_per_process(spark, tmp_path):
     """The discovery fingerprint gate is per-process: a resumed crawl()'s
     first wave always re-scans, so corpus changes between crawl() calls —
@@ -395,7 +366,7 @@ def test_adaptive_policy_delta_commits_are_outcome_hosts(spark, pages,
     """Non-compaction waves commit host_policy as a keyed-host delta of
     EXACTLY the hosts with fetch outcomes that wave (only they can change
     delay; untouched hosts ride the manifest), and the composed policy
-    equals the legacy all-full commits' policy wave for wave."""
+    equals the all-full (compact_every=1) commits' policy wave for wave."""
     from pyspark.sql import functions as F
     sim, _ = simulate_crawl(pages_dict, seed_search_url(), max_count=10**9)
     store = SnapshotStore(str(tmp_path / "pd"))
@@ -417,7 +388,7 @@ def test_adaptive_policy_delta_commits_are_outcome_hosts(spark, pages,
             ~((F.col("status") == "pending") & (F.col("attempts") == 0))
         ).collect()}
         assert pol_hosts == outcome_hosts, s["wave"]
-    # legacy all-full run produces the identical final policy
+    # the all-full run produces the identical final policy
     store2 = SnapshotStore(str(tmp_path / "pf"))
     crawl(spark, pages, seed_search_url(), store2, wave_seconds=100,
           max_waves=30, n_shards=4, adaptive_delay=True, compact_every=1)
@@ -437,7 +408,7 @@ def test_snapshot_expiry_bounds_storage_and_resumes(spark, pages, pages_dict,
     import os
     sim, _ = simulate_crawl(pages_dict, seed_search_url(), max_count=10**9)
     store = SnapshotStore(str(tmp_path / "exp"))
-    # compact_every=1 = all-full commits (the legacy shape this test pins);
+    # compact_every=1 = all-full commits (the shape this test pins);
     # delta-mode expiry is covered by test_delta_crawl_storage_bounded
     crawl(spark, pages, seed_search_url(), store, wave_seconds=100,
           max_waves=3, n_shards=4, expire_keep=2, compact_every=1)
@@ -566,6 +537,7 @@ def test_trap_guard_fixpoint_break(spark, tmp_path):
         "url string, page_num int, card_idx int")
     store = SnapshotStore(str(tmp_path / "fx"))
     store.commit(fr.enqueue(cand, 0, LOGICAL_T0), "frontier", 0)
+    store.mark_wave_committed(0)  # an external seeder stamps the pointer
     # a corpus with no seed cards: nothing new can ever be discovered
     barren = spark.createDataFrame(
         [("https://elsewhere.org/x", bytearray(b"<html></html>"))],

@@ -1,5 +1,5 @@
 """Evidence for O(wave) state commits: run the SAME tight-budget crawl in
-all-full mode (compact_every=1, the legacy shape) and delta mode (default),
+all-full mode (compact_every=1, every wave full) and delta mode (default),
 and report per-wave frontier rows written, frontier commit wall, and final
 store bytes. The delta rows-written column must track the wave's admission
 size while the full column tracks total state — the write-amplification gap
